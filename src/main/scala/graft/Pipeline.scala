@@ -3,7 +3,7 @@ package graft
 import graft.operators._
 import graft.sinks.Sinks
 import graft.sources.Fasta
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The complete reference pipeline, end-to-end, as one Spark application
@@ -63,9 +63,12 @@ object Pipeline {
     * One row per (stage, protein); a `null` protein carries a cross-protein
     * total (the raw file predates the protein split).
     *
-    * Partition discovery goes through the Hadoop `FileSystem` API — a
-    * `java.io.File` listing would return nothing on HDFS/S3, where a
-    * 100 TB run actually stores its stages. */
+    * Every input is scanned once and nothing runs until the caller's
+    * action. `2_filtered` is one text scan of `$outDir/filtered` counting
+    * `>` header lines per protein: the text source's partition discovery
+    * finds the `protein=<p>` dirs through the Hadoop `FileSystem` (so
+    * file://, hdfs:// and s3a:// all work), and the explicit schema keeps
+    * the partition value a string (`protein=7` is `"7"`, not 7). */
   def stageCounts(spark: SparkSession, fastaPath: String, outDir: String,
       metaWithVariants: Map[String, DataFrame] = Map.empty,
       weeklyMatrix: Map[String, DataFrame] = Map.empty,
@@ -73,23 +76,16 @@ object Pipeline {
     val raw = Fasta.read(spark, fastaPath).toDF()
       .agg(count(lit(1)).as("n"))
       .select(lit("1_raw").as("stage"), lit(null).cast("string").as("protein"), col("n"))
-    // one count per protein partition dir (input_file_name() is empty for
-    // DSv2 readers, so enumerate the hive-style dirs like partition
-    // discovery does — via Hadoop FS, which resolves file://, hdfs://, s3a://)
-    val filteredRoot = new org.apache.hadoop.fs.Path(s"$outDir/filtered")
-    val fs = filteredRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    val partDirs = (if (fs.exists(filteredRoot)) fs.listStatus(filteredRoot)
-      else Array.empty[org.apache.hadoop.fs.FileStatus])
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("protein="))
-    require(partDirs.nonEmpty, s"no filtered partitions under $outDir/filtered")
-    val filtered = partDirs.map { d =>
-      spark.read.format("fasta").load(s"${d.getPath.toString}/*.txt")
-        .agg(count(lit(1)).as("n"))
-        .select(lit("2_filtered").as("stage"),
-          lit(d.getPath.getName.stripPrefix("protein=")).as("protein"), col("n"))
-    }.reduce(_ unionByName _)
-    val clustered = spark.read.option("header", "true").csv(s"$outDir/clusters")
-      .agg(sum(col("cluster_size").cast("long")).as("n"))
+    val noPartitions = s"no filtered partitions under $outDir/filtered"
+    val filteredText =
+      try spark.read.schema("value STRING, protein STRING").text(s"$outDir/filtered")
+      catch { case e: AnalysisException => throw new IllegalArgumentException(noPartitions, e) }
+    require(filteredText.inputFiles.exists(_.contains("/protein=")), noPartitions)
+    val filtered = filteredText.filter(col("value").startsWith(">"))
+      .groupBy("protein").agg(count(lit(1)).as("n"))
+      .select(lit("2_filtered").as("stage"), col("protein"), col("n"))
+    val clustered = Sinks.readCsv(spark, s"$outDir/clusters", ClustersSchema)
+      .agg(sum(col("cluster_size")).as("n"))
       .select(lit("3_cluster_sizes").as("stage"),
         lit(null).cast("string").as("protein"), col("n"))
     val metaLinked = metaWithVariants.toSeq.sortBy(_._1).map { case (prot, df) =>
@@ -106,61 +102,72 @@ object Pipeline {
       .orderBy("stage", "protein")
   }
 
+  /** The `clusters` table [[prepare]] writes. */
+  private val ClustersSchema = "cluster_id STRING, cluster_size LONG, first_id STRING"
+
   /** Stages 5–8 over one protein's MSA (the aligned FASTA an external
-    * aligner produced from stage 3's clusters). */
+    * aligner produced from stage 3's clusters).
+    *
+    * Each product is computed once: the PyMOL bands and the heatmap are
+    * built from the `per_position` and `weekly_matrix` tables just
+    * written (as `Pymol_Strings.py` reads its CSV), not by re-planning
+    * the subplans that produced them. Only the variant events are
+    * cached, and they are released however the run ends. */
   def analyzeMsa(spark: SparkSession, msaPath: String, refIsolateId: String,
       meta: DataFrame, clusterMap: DataFrame, outDir: String): Unit = {
     val aligned = VariantCalling.readMsa(spark, msaPath)
-    val clusterHeaders = aligned.toDF().select(
-      col("clusterId"), col("clusterSize"))
 
-    // stage 5: which cluster holds the reference isolate
+    // stage 5: which cluster holds the reference isolate; its row and the
+    // total sequence count come from one pass over the MSA
     val refClusterId = RefCluster.find(
       clusterMap.withColumnRenamed("accession", "input_id"), refIsolateId)
-    val refRow = aligned.filter(col("clusterId") === refClusterId)
-      .select("seq", "clusterSize").head()
+    val isRef = col("clusterId") === refClusterId
+    val msaRow = aligned.agg(
+      first(when(isRef, col("seq")), ignoreNulls = true),
+      first(when(isRef, col("clusterSize")), ignoreNulls = true),
+      sum(col("clusterSize"))).head()
+    require(!msaRow.isNullAt(0), s"reference cluster $refClusterId is not in $msaPath")
+    val (refSeq, refSize, total) = (msaRow.getString(0), msaRow.getInt(1), msaRow.getLong(2))
 
     // stage 6: embarrassingly-parallel variant calling, cached for fan-out
-    val events = VariantCalling.callAll(aligned, refRow.getString(0))
+    val events = VariantCalling.callAll(aligned, refSeq)
       .filter(col("clusterId") =!= refClusterId).cache()
+    try {
+      // stage 7: report fan-out off the cached events
+      Sinks.writeCsv(VariantCalling.toRawTsvShape(events),
+        s"$outDir/variants_raw", sep = "\t")
+      Sinks.writeBlockReport(
+        Reports.infoByCluster(events).select(
+          concat(col("cluster_id"), lit(", "), col("cluster_size"),
+            lit(" sequences")).as("hdr"), col("codes")),
+        "hdr", "codes", s"$outDir/info_by_cluster")
+      Sinks.writeCsv(Reports.mutationCsv(events, total), s"$outDir/all_by_code")
+      Sinks.writeCsv(Reports.perPositionTable(events, refSeq.replace("-", ""), total),
+        s"$outDir/per_position")
+      Sinks.writeCsv(Reports.pymolStrings(Sinks.readCsv(spark,
+        s"$outDir/per_position", Reports.PerPositionSchema)), s"$outDir/pymol")
 
-    // stage 7: report fan-out off the cached events
-    val total = Reports.totalSequences(clusterHeaders).head().getLong(0)
-    Sinks.writeCsv(VariantCalling.toRawTsvShape(events),
-      s"$outDir/variants_raw", sep = "\t")
-    Sinks.writeBlockReport(
-      Reports.infoByCluster(events).select(
-        concat(col("cluster_id"), lit(", "), col("cluster_size"),
-          lit(" sequences")).as("hdr"), col("codes")),
-      "hdr", "codes", s"$outDir/info_by_cluster")
-    Sinks.writeCsv(Reports.mutationCsv(events, total), s"$outDir/all_by_code")
-    val refGapless = refRow.getString(0).replace("-", "")
-    Sinks.writeCsv(Reports.perPositionTable(events, refGapless, total),
-      s"$outDir/per_position")
-    Sinks.writeCsv(Reports.pymolStrings(
-      Reports.perPositionTable(events, refGapless, total)), s"$outDir/pymol")
-
-    // stage 8: weekly matrices (every region + Worldwide, one pass)
-    val per = VariantTimeSeries.variantsPerCluster(events, refClusterId,
-      refRow.getInt(1))
-    val joined = VariantTimeSeries.joinMetadata(meta, clusterMap, per)
-    val wm = VariantTimeSeries.weeklyMatrix(joined)
-    Sinks.writeCsv(wm.orderBy("region", "code", "week_start"),
-      s"$outDir/weekly_matrix")
-    // stage 8b: the reference's styled heatmap table (S10,
-    // Time_Series.py:813–837) over the Worldwide share matrix — week
-    // columns are report-bounded, so the explicit pivot value list and
-    // the xlsx sink's driver-side collect are safe by construction
-    val global = wm.filter(col("region") === "Worldwide")
-    val weeks = global.select("week_start").distinct()
-      .orderBy("week_start").collect().map(_.get(0).toString)
-    if (weeks.nonEmpty)
-      graft.sinks.Xlsx.writeHeatmap(
-        global.groupBy("code").pivot("week_start", weeks.toSeq)
-          .sum("share").na.fill(0.0).orderBy("code"),
-        s"$outDir/heatmap_table.xlsx", "Global")
-    Sinks.writeCsv(VariantTimeSeries.weeklyCombos(joined)
-      .orderBy("region", "week_start", "combo"), s"$outDir/weekly_combos")
-    events.unpersist()
+      // stage 8: weekly matrices (every region + Worldwide, one pass)
+      val per = VariantTimeSeries.variantsPerCluster(events, refClusterId, refSize)
+      val joined = VariantTimeSeries.joinMetadata(meta, clusterMap, per)
+      Sinks.writeCsv(VariantTimeSeries.weeklyMatrix(joined)
+        .orderBy("region", "code", "week_start"), s"$outDir/weekly_matrix")
+      // stage 8b: the reference's styled heatmap table (S10,
+      // Time_Series.py:813–837) over the Worldwide share matrix — week
+      // columns are report-bounded, so the explicit pivot value list and
+      // the xlsx sink's driver-side collect are safe by construction
+      val global = Sinks.readCsv(spark, s"$outDir/weekly_matrix",
+          VariantTimeSeries.WeeklyMatrixSchema)
+        .filter(col("region") === "Worldwide")
+      val weeks = global.select("week_start").distinct()
+        .orderBy("week_start").collect().map(_.get(0).toString)
+      if (weeks.nonEmpty)
+        graft.sinks.Xlsx.writeHeatmap(
+          global.groupBy("code").pivot("week_start", weeks.toSeq)
+            .sum("share").na.fill(0.0).orderBy("code"),
+          s"$outDir/heatmap_table.xlsx", "Global")
+      Sinks.writeCsv(VariantTimeSeries.weeklyCombos(joined)
+        .orderBy("region", "week_start", "combo"), s"$outDir/weekly_combos")
+    } finally events.unpersist()
   }
 }

@@ -13,12 +13,14 @@ package graft
   */
 object QueryTimer {
   def main(args: Array[String]): Unit = {
-    val names = args.headOption.getOrElse(sys.error(
+    // flags go anywhere; the positionals are read with them stripped
+    val (flags, pos) = args.partition(_.startsWith("--"))
+    val names = pos.headOption.getOrElse(sys.error(
       "usage: QueryTimer <q1,q2,...> [sfDir] [reps] [--noop]"))
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val noop = args.contains("--noop")
+    val sfDir = pos.lift(1).getOrElse("/root/testdata/sf0.1")
+    val reps = pos.lift(2).map(_.toInt).getOrElse(3)
+    val noop = flags.contains("--noop")
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val spark = GraftSession.local("graft-query-timer")

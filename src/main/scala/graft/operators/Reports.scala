@@ -139,6 +139,11 @@ object Reports {
       .orderBy("Residue_Number")
   }
 
+  /** The [[perPositionTable]] columns and types, for reading its CSV back. */
+  val PerPositionSchema: String = "Residue_Number INT, Total_Variants LONG, " +
+    "Percent_Variants STRING, Substitutions LONG, Insertions LONG, " +
+    "Deletions LONG, Extensions LONG, Indels LONG"
+
   /** F9/S11 — PyMOL selection strings: residues bucketed into the
     * reference's frequency bands, `+`-joined per band
     * (`/root/reference/Pymol_Strings.py:14–84`). Input = [[perPositionTable]]

@@ -382,8 +382,9 @@ object TextAnalysis {
   /** JVM fast path of [[rollingMinHashes]] for the md5-hex gram hash
     * (r16, guide §4): one pass per document computing min md5-hex over
     * all character k-grams — no per-gram string explode, no 5M-row
-    * aggregate, one MessageDigest reused per partition. Bit-identical to
-    * `rollingMinHashes(df, id, text, k, g => md5(g.cast("binary")))`:
+    * aggregate, one MessageDigest per document, reused across its grams.
+    * Bit-identical to `rollingMinHashes(df, id, text, k,
+    * g => md5(g.cast("binary")))`:
     * `normalized` output is pure ASCII (lowercased, non-[a-z0-9\s]
     * replaced), so JVM substring == Spark's code-point substr; lowercase
     * hex compares like Spark's string min; a null-text doc keeps its row

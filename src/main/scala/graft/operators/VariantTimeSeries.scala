@@ -96,6 +96,10 @@ object VariantTimeSeries {
         .otherwise(col("freq").cast("double") / col("total_genomes")))
   }
 
+  /** The [[weeklyMatrix]] columns and types, for reading its CSV back. */
+  val WeeklyMatrixSchema: String = "region STRING, week_start DATE, code STRING, " +
+    "freq LONG, total_genomes LONG, zero_mutations LONG, share DOUBLE"
+
   /** J8 — annotate each exploded variant-list element with its per-code
     * info (type, reference position) via a broadcast join to the distinct
     * code table — the reference probes the events frame once per element
@@ -125,20 +129,27 @@ object VariantTimeSeries {
   /** A15 — total genomes across weeks with head/tail week trimming
     * (`/root/reference/Sequence_Counter.py:229–236`): weeks are ranked by
     * start date and the first `trimHead` / last `trimTail` excluded before
-    * summing the per-week totals. Input = [[weeklyMatrix]] output (or any
-    * frame with week_start + total_genomes per region). */
+    * summing the per-week totals; `null` when no week is left. Input =
+    * [[weeklyMatrix]] output (or any frame with week_start + total_genomes
+    * per region).
+    *
+    * A series is bounded by its week count, so one global aggregate
+    * gathers its distinct (week_start, total_genomes) pairs sorted by
+    * week, and the kept index range is summed in that array. */
   def trimmedWeeklyTotal(matrix: DataFrame, region: String,
       trimHead: Int, trimTail: Int): DataFrame = {
     require(trimHead >= 0 && trimTail >= 0, "trims must be non-negative")
-    val weeks = matrix.filter(col("region") === region)
-      .select("week_start", "total_genomes").distinct()
-    // rank + grand count without partition-less windows: two-phase global
-    // row number, grand total as a broadcast 1-row agg
-    val ranked = Ranks.globalRowNumber(weeks, Seq(col("week_start").asc), "__rk")
-    val n = ranked.agg(count(lit(1)).as("__n"))
-    ranked.crossJoin(broadcast(n))
-      .filter(col("__rk") > trimHead && col("__rk") <= col("__n") - trimTail)
-      .agg(sum(col("total_genomes")).as("total_genomes"))
+    val weeks = col("__weeks")
+    matrix.filter(col("region") === region)
+      .agg(array_sort(collect_set(struct(col("week_start"), col("total_genomes"))))
+        .as("__weeks"))
+      .select(aggregate(
+        filter(weeks, (_, i) => i >= trimHead && i < size(weeks) - trimTail),
+        lit(null).cast("long"),
+        // an empty or all-null range sums to null, as `sum` does
+        (acc, w) => when(w("total_genomes").isNull, acc)
+          .otherwise(coalesce(acc, lit(0L)) + w("total_genomes").cast("long")))
+        .as("total_genomes"))
   }
 
   /** A11 — weekly combination counts: the comma-joined variant list is the

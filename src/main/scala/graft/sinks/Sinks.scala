@@ -25,6 +25,11 @@ object Sinks {
     df.coalesce(1).write.mode(SaveMode.Overwrite)
       .option("header", "true").option("sep", sep).csv(path)
 
+  /** S8 read side: a [[writeCsv]] output under its known `schema` (a DDL
+    * string), so no header or type inference runs. */
+  def readCsv(spark: SparkSession, path: String, schema: String): DataFrame =
+    spark.read.option("header", "true").schema(schema).csv(path)
+
   /** S9 — grouped `>`-block text report:
     * {{{
     * >cluster_id, N sequences

@@ -165,6 +165,40 @@ class DomainPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(total == 50L) // 20 + 30
   }
 
+  test("trimmedWeeklyTotal edges: over-trimmed and absent region give null, no trim sums all") {
+    import spark.implicits._
+    val matrix = Seq(
+      ("Worldwide", "2021-01-10", "A1B", 20L), ("Worldwide", "2021-01-03", "A1B", 10L),
+      ("Worldwide", "2021-01-03", "C2D", 10L), // second code, same week total
+      ("Worldwide", "2021-01-17", "A1B", 30L), ("Europe", "2021-01-03", "A1B", 5L))
+      .toDF("region", "week_start", "code", "total_genomes")
+      .withColumn("week_start", to_date(col("week_start")))
+    def total(region: String, head: Int, tail: Int): Option[Long] = {
+      val rows = VariantTimeSeries.trimmedWeeklyTotal(matrix, region, head, tail).collect()
+      assert(rows.length == 1)
+      Option(rows.head.get(0)).map(_.asInstanceOf[Long])
+    }
+    assert(total("Worldwide", 0, 0).contains(60L)) // each week counted once
+    assert(total("Worldwide", 2, 0).contains(30L))
+    assert(total("Worldwide", 0, 2).contains(10L))
+    assert(total("Worldwide", 2, 1).isEmpty) // trims == week count
+    assert(total("Worldwide", 5, 4).isEmpty) // trims > week count
+    assert(total("Oceania", 0, 0).isEmpty) // absent region
+    intercept[IllegalArgumentException](total("Worldwide", -1, 0))
+
+    // stageCounts reports an over-trimmed series as 0 genomes
+    val in = "/tmp/graft_domain_trim.fasta"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(in),
+      ">Spike|iso/EPI_1|2021-01-01|EPI_1|o|l|Human\nMFVFLVLLP\n")
+    val out = "/tmp/graft_domain_trim_out"
+    Pipeline.prepare(spark, in, out, refLenByProtein = Map("Spike" -> 9),
+      lengthDelta = 3, ambiguityCutoff = 0.1)
+    val ts = Pipeline.stageCounts(spark, in, out,
+        weeklyMatrix = Map("Spike" -> matrix), trimHead = 2, trimTail = 1).collect()
+      .filter(_.getString(0) == "5_ts_total")
+    assert(ts.map(r => (r.getString(1), r.getLong(2))).toSeq == Seq(("Spike", 0L)))
+  }
+
   test("pivotWide: long frame → labeled wide matrix, zero-filled") {
     import spark.implicits._
     val long = Seq(

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.{Reports, VariantCalling}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -111,5 +112,132 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         zf.getEntry("xl/worksheets/sheet1.xml")).readAllBytes(), "UTF-8")
       assert(sheet.contains("F2L") && sheet.contains("colorScale"))
     } finally zf.close()
+  }
+
+  /** Tiny FASTA under `prepare`'s header layout
+    * (`>protein|iso/acc|date|acc|o|l|host`). */
+  private def writeFasta(path: String, recs: Seq[(String, String, String)]): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), recs.map {
+      case (protein, acc, seq) => s">$protein|iso/$acc|2021-01-01|$acc|o|l|Human\n$seq\n"
+    }.mkString)
+
+  test("stageCounts: a numeric-looking protein partition stays a string") {
+    val in = "/tmp/graft_pipe_numeric.fasta"
+    writeFasta(in, Seq(("7", "EPI_1", "MFVFLVLLP"), ("7", "EPI_2", "MFVFLVLLQ"),
+      ("07", "EPI_3", "SGFRKMAFP")))
+    val out = "/tmp/graft_pipe_numeric_out"
+    Pipeline.prepare(spark, in, out, refLenByProtein = Map("7" -> 9, "07" -> 9),
+      lengthDelta = 3, ambiguityCutoff = 0.1)
+    val filtered = Pipeline.stageCounts(spark, in, out).collect()
+      .filter(_.getString(0) == "2_filtered")
+      .map(r => r.get(1) -> r.getLong(2)).toMap
+    // "7" and "07" would both become the integer 7 under type inference
+    assert(filtered == Map[Any, Long]("7" -> 2L, "07" -> 1L))
+  }
+
+  test("stageCounts: fails by name when the filtered stage holds no partitions") {
+    val in = "/tmp/graft_pipe_nopart.fasta"
+    writeFasta(in, Seq(("Spike", "EPI_1", "MFVFLVLLP")))
+    val out = "/tmp/graft_pipe_nopart_out"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    val missing = intercept[IllegalArgumentException](
+      Pipeline.stageCounts(spark, in, out))
+    assert(missing.getMessage.contains(s"no filtered partitions under $out/filtered"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$out/filtered"))
+    val empty = intercept[IllegalArgumentException](
+      Pipeline.stageCounts(spark, in, out))
+    assert(empty.getMessage.contains(s"no filtered partitions under $out/filtered"))
+  }
+
+  test("analyzeMsa: heatmap and PyMOL bands equal the in-plan products") {
+    import spark.implicits._
+    val alignedRef = "MFVFLVLLPL-VSS"
+    val msa =
+      s""">clust0;size=2;
+         |$alignedRef
+         |>Uniq1;size=5;
+         |MLVFLVLLPL-VSS
+         |>Uniq2;size=3;
+         |MF--LVLLPL-VSS
+         |>Uniq3;size=2;
+         |MFVFLVLLPLKVSS
+         |>Uniq4;size=1;
+         |MFVFLVLLPL-VSA
+         |""".stripMargin
+    val msaPath = "/tmp/graft_pipe_readback_msa.fasta"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(msaPath), msa)
+    val clusterMap = Seq(
+      ("WIV04-ref", "clust0"), ("EPI_0", "clust0"), ("EPI_1", "Uniq1"),
+      ("EPI_2", "Uniq1"), ("EPI_3", "Uniq2"), ("EPI_4", "Uniq2"),
+      ("EPI_5", "Uniq3"), ("EPI_6", "Uniq3"))
+      .toDF("accession", "cluster_id")
+    val meta = Seq( // three weeks, shares of thirds and halves
+      ("EPI_0", "2021-01-03", "Europe"), ("EPI_1", "2021-01-04", "Asia"),
+      ("EPI_2", "2021-01-05", "Europe"), ("EPI_3", "2021-01-12", "Europe"),
+      ("EPI_4", "2021-01-13", "Asia"), ("EPI_5", "2021-01-13", "Asia"),
+      ("EPI_6", "2021-01-19", "Africa"))
+      .toDF("accession", "date", "region")
+    val out = "/tmp/graft_pipe_readback_out"
+    Pipeline.analyzeMsa(spark, msaPath, "WIV04-ref", meta, clusterMap, out)
+
+    // every heatmap cell is the Worldwide share of weekly_matrix, bit for bit
+    val wm = spark.read.option("header", "true").schema(
+      "region STRING, week_start DATE, code STRING, freq LONG, " +
+        "total_genomes LONG, zero_mutations LONG, share DOUBLE")
+      .csv(s"$out/weekly_matrix").filter(col("region") === "Worldwide").collect()
+    val shares = wm.map(r => (r.getAs[String]("code"),
+      r.getAs[java.sql.Date]("week_start").toString) -> r.getAs[Double]("share")).toMap
+    val weeks = shares.keys.map(_._2).toSeq.distinct.sorted
+    assert(weeks.size == 3)
+    val zf = new java.util.zip.ZipFile(s"$out/heatmap_table.xlsx")
+    val sheet = try new String(zf.getInputStream(
+      zf.getEntry("xl/worksheets/sheet1.xml")).readAllBytes(), "UTF-8")
+      finally zf.close()
+    val rows = "<row r=\"\\d+\">(.*?)</row>".r.findAllMatchIn(sheet)
+      .map(_.group(1)).toSeq
+    val cell = "<c r=\"[A-Z]+\\d+\"[^>]*?(?:/>|>(?:<is><t>(.*?)</t></is>|<v>(.*?)</v>)</c>)".r
+    def cells(row: String): Seq[String] = cell.findAllMatchIn(row)
+      .map(m => Option(m.group(1)).orElse(Option(m.group(2))).orNull).toSeq
+    assert(cells(rows.head) == "code" +: weeks)
+    val heat = rows.tail.map(cells).map(cs => cs.head -> cs.tail.map(_.toDouble)).toMap
+    assert(heat.keySet == shares.keys.map(_._1).toSet)
+    heat.foreach { case (code, vs) =>
+      assert(vs == weeks.map(w => shares.getOrElse((code, w), 0.0)), code)
+    }
+
+    // the PyMOL bands equal the in-plan pymolStrings(perPositionTable(...))
+    val aligned = VariantCalling.readMsa(spark, msaPath)
+    val events = VariantCalling.callAll(aligned, alignedRef)
+      .filter(col("clusterId") =!= "clust0")
+    val inPlan = Reports.pymolStrings(
+      Reports.perPositionTable(events, alignedRef.replace("-", ""), 13L))
+      .collect().map(_.toSeq.map(v => Option(v).map(_.toString).orNull)).toSeq
+    assert(inPlan.exists(_.head == null)) // a count-of-1 residue: no band
+    val written = spark.read.option("header", "true").csv(s"$out/pymol")
+      .collect().map(_.toSeq.map(v => Option(v).map(_.toString).orNull)).toSeq
+    assert(written == inPlan)
+  }
+
+  test("analyzeMsa: a failing run releases the cached events") {
+    // an all-gap reference row makes the caller throw on the first action
+    // over the (already cached) events
+    val msa =
+      """>clust0;size=1;
+        |---
+        |>Uniq1;size=2;
+        |MF-
+        |""".stripMargin
+    val msaPath = "/tmp/graft_pipe_failing_msa.fasta"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(msaPath), msa)
+    import spark.implicits._
+    val clusterMap = Seq(("WIV04-ref", "clust0"), ("EPI_1", "Uniq1"))
+      .toDF("accession", "cluster_id")
+    val meta = Seq(("EPI_1", "2021-01-03", "Europe")).toDF("accession", "date", "region")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val e = intercept[Exception](Pipeline.analyzeMsa(spark, msaPath, "WIV04-ref",
+      meta, clusterMap, "/tmp/graft_pipe_failing_out"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("all-gap reference row")))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }
