@@ -58,47 +58,24 @@ object LlmPipeline {
       docs.join(survivors, idCol === col("__uid"), "left_semi")
         .unionByName(docs.filter(u.isNull))
     }
-    // 1. score + gate (scan-speed expressions, no shuffle)
-    val scored0 = deduped
-      .withColumn("__id", idCol)
-      .withColumn("__text", textCol)
-      .withColumn("quality", TextAnalysis.qualityScore(textCol))
-      .withColumn("lang", TextAnalysis.languageGuessFromTokens(
-        TextAnalysis.wsTokens(lower(textCol))))
-      .filter(col("quality") >= minQuality)
-    // 1b. benchmark decontamination (broadcast eval grams, no corpus
-    //     shuffle) — before dedup, so contaminated docs can't become
-    //     cluster representatives; the fuzzy pass catches paraphrased
-    //     leaks the exact k-gram check is blind to
-    val exactClean = benchmark.fold(scored0)(b =>
-      Curation.decontaminate(scored0, col("__id"), col("__text"),
-        b, benchmarkText, decontamK))
+    // 1. [[gated]]; the fuzzy pass catches paraphrased leaks the exact
+    //    k-gram check is blind to
+    val exactClean = gated(deduped, idCol, textCol, minQuality,
+      benchmark, benchmarkText, decontamK)
     val scored = benchmark.filter(_ => fuzzyDecontam).fold(exactClean)(b =>
       Curation.fuzzyDecontaminate(exactClean, col("__id"), col("__text"),
         b, benchmarkText, minJaccard = fuzzyMinJaccard))
     // 2. exact + near dedup → survivor ids (hash shuffles only), then a
     //    semi join keeps the surviving documents' full rows
-    val survivors0 = Dedup.dedupCorpus(scored, col("__id"), col("__text"),
+    val survivors = Dedup.dedupCorpus(scored, col("__id"), col("__text"),
       minJaccard = minJaccard)
-    // 2b. target-mixture sampling on the SURVIVOR ids (deterministic
-    //     md5-threshold filter; after dedup so survivor selection and
-    //     mixture stay independent decisions)
-    val survivors =
-      if (mixtureRates.isEmpty) survivors0
-      else Curation.mixtureSample(
-        scored.join(survivors0.select(col("id").as("__id")), Seq("__id"), "left_semi")
-          .select(col("__id").as("id"), mixtureDomainCol.as("__dom")),
-        col("id"), col("__dom"), mixtureRates)
     val kept = scored.join(survivors.select(col("id").as("__id")), Seq("__id"), "left_semi")
-    // 3. split label from the DOCUMENT id (leak-free), then chunk — the
-    //    doc-level columns ride through the chunker, zero joins
-    val labeled = kept.withColumn("split",
-      TextAnalysis.hashSplit(col("__id"), splits))
-    val chunks = TextAnalysis.chunkByTokens(labeled, col("__id"), col("__text"),
-        maxTokens, overlap, passthrough = Seq("quality", "lang", "split"))
-      .withColumnRenamed("id", "doc_id")
-    chunks.write.mode("overwrite").partitionBy("split").parquet(outDir)
-    chunks
+    // 2b. target-mixture sampling of the survivors (deterministic
+    //     md5-threshold filter; after dedup so survivor selection and
+    //     mixture stay independent decisions). No rates keep every row:
+    //     the filter is `true` and the optimizer drops it.
+    writeChunks(Curation.mixtureSample(kept, col("__id"), mixtureDomainCol, mixtureRates),
+      splits, maxTokens, overlap, outDir, "overwrite")
   }
 
   /** A snapshot's worth of [[curate]] plus its carried dedup state. */
@@ -123,25 +100,12 @@ object LlmPipeline {
       splits: Seq[(String, Double)] = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
       benchmark: Option[DataFrame] = None, benchmarkText: Column = col("text"),
       decontamK: Int = 13): SnapshotResult = {
-    val scored0 = batch
-      .withColumn("__id", idCol)
-      .withColumn("__text", textCol)
-      .withColumn("quality", TextAnalysis.qualityScore(textCol))
-      .withColumn("lang", TextAnalysis.languageGuessFromTokens(
-        TextAnalysis.wsTokens(lower(textCol))))
-      .filter(col("quality") >= minQuality)
-    val scored = benchmark.fold(scored0)(b =>
-      Curation.decontaminate(scored0, col("__id"), col("__text"),
-        b, benchmarkText, decontamK))
+    val scored = gated(batch, idCol, textCol, minQuality,
+      benchmark, benchmarkText, decontamK)
     val r = Dedup.incrementalDedup(scored, col("__id"), col("__text"),
       state, minJaccard = minJaccard)
     val kept = scored.join(r.kept.select(col("id").as("__id")), Seq("__id"), "left_semi")
-    val labeled = kept.withColumn("split",
-      TextAnalysis.hashSplit(col("__id"), splits))
-    val chunks = TextAnalysis.chunkByTokens(labeled, col("__id"), col("__text"),
-        maxTokens, overlap, passthrough = Seq("quality", "lang", "split"))
-      .withColumnRenamed("id", "doc_id")
-    chunks.write.mode("append").partitionBy("split").parquet(outDir)
+    val chunks = writeChunks(kept, splits, maxTokens, overlap, outDir, "append")
     // Materialize the carried state (executor-local blocks) so (a) the next
     // snapshot's plans don't drag this step's full lineage along — across
     // many snapshots that lineage compounds into re-running every previous
@@ -150,5 +114,39 @@ object LlmPipeline {
     val carried = r.state.localCheckpoint(true)
     r.release()
     SnapshotResult(chunks, carried)
+  }
+
+  /** Stage 1 of [[curate]] and [[curateSnapshot]]: score + gate
+    * (scan-speed expressions, no shuffle), then exact benchmark
+    * decontamination (broadcast eval grams, no corpus shuffle) — before
+    * dedup, so contaminated docs can't become cluster representatives.
+    * Adds `__id`, `__text`, `quality` and `lang`. */
+  private def gated(docs: DataFrame, idCol: Column, textCol: Column,
+      minQuality: Double, benchmark: Option[DataFrame],
+      benchmarkText: Column, decontamK: Int): DataFrame = {
+    val scored = docs
+      .withColumn("__id", idCol)
+      .withColumn("__text", textCol)
+      .withColumn("quality", TextAnalysis.qualityScore(textCol))
+      .withColumn("lang", TextAnalysis.languageGuessFromTokens(
+        TextAnalysis.wsTokens(lower(textCol))))
+      .filter(col("quality") >= minQuality)
+    benchmark.fold(scored)(b =>
+      Curation.decontaminate(scored, col("__id"), col("__text"),
+        b, benchmarkText, decontamK))
+  }
+
+  /** Last stage of [[curate]] and [[curateSnapshot]]: split label from
+    * the DOCUMENT id (leak-free), then chunk — the doc-level columns ride
+    * through the chunker, zero joins — and write partitioned by split. */
+  private def writeChunks(kept: DataFrame, splits: Seq[(String, Double)],
+      maxTokens: Int, overlap: Int, outDir: String, mode: String): DataFrame = {
+    val labeled = kept.withColumn("split",
+      TextAnalysis.hashSplit(col("__id"), splits))
+    val chunks = TextAnalysis.chunkByTokens(labeled, col("__id"), col("__text"),
+        maxTokens, overlap, passthrough = Seq("quality", "lang", "split"))
+      .withColumnRenamed("id", "doc_id")
+    chunks.write.mode(mode).partitionBy("split").parquet(outDir)
+    chunks
   }
 }

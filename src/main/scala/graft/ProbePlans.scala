@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 
 /** Writes PLANS.md: `explain("formatted")` for the headline queries, so
   * the chosen physical plans are reviewable without running Spark.
-  * Run: `sbt "runMain graft.PlanDump"`. */
-object PlanDump {
+  * Run: `sbt "runMain graft.Probe plan"`. */
+object ProbePlans {
 
   val headline = Seq(
     "j3_broadcast_star_join" -> "star join — all dimensions broadcast, single partial-agg shuffle",
@@ -280,23 +280,20 @@ object PlanDump {
       |crosses the table's skip-ratio budget.
       |""".stripMargin
 
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local("graft-plan-dump")
+  def write(spark: org.apache.spark.sql.SparkSession): Unit = {
     val sf = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
-    sb.append("Generated by `sbt \"runMain graft.PlanDump\"` at sf0.001. The\n")
+    sb.append("Generated by `sbt \"runMain graft.Probe plan\"` at sf0.001. The\n")
     sb.append("properties these plans must keep are asserted in PlanSpec.\n")
     headline.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sf)
       sb.append(s"\n## $name\n\n$why\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(6000))
+      sb.append(Probe.formatted(df).take(6000))
       sb.append("\n```\n")
     }
     sb.append(epilogue)
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")
-    spark.stop()
   }
 }

@@ -771,7 +771,7 @@ object Dedup {
     // the candidate docs' postings — are localCheckpointed (eager):
     // they sit under FOUR downstream plan branches each, and without
     // materialization every branch re-runs the corpus-wide
-    // tokenize → shingle → df join pipeline (ScaleProbe measured the
+    // tokenize → shingle → df join pipeline (the scale probe measured the
     // naive form at 279 s vs ~30 s on 110k docs; both are sized by the
     // near-dup population, not the corpus, so the storage is small).
     val posting = shinglePosting(df, idCol, textCol, shingleK)

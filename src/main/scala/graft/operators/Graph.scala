@@ -41,6 +41,13 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Lineage cut for the loop-invariant relations of the unrolled
+    * operators below. eager = false: the cut happens when the FIRST
+    * ACTION runs, not at DataFrame construction — merely building the
+    * query (plan dumps, schema inspection, registry iteration) must not
+    * launch Spark jobs. */
+  private def cut(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+
   /** Ranks are integers in units of 1e-12 (so total mass ≈ SCALE). */
   val Scale: Long = 1000000000000L
 
@@ -54,8 +61,7 @@ object Graph {
     * Dangling-node mass leaks (no redistribution) — deliberate, so the
     * recurrence stays a pure integer fold both engines agree on.
     */
-  def pageRank(edges: DataFrame, iterations: Int,
-               materialize: Boolean = true): DataFrame = {
+  def pageRank(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
     // The K iterations unroll into ONE plan in which the loop-invariant
     // relations appear at every level — without a lineage cut, the edge
@@ -69,14 +75,7 @@ object Graph {
     // blocks are executor-local and unreplicated — an executor loss
     // mid-computation fails the job instead of recomputing (rerun it);
     // that trade buys not re-executing the edge pipeline K times, the
-    // standard iterative-algorithm bargain. `materialize = false` opts
-    // out (single-iteration or plan-inspection uses — the dumped plan
-    // then shows the real scans instead of checkpointed RDDs).
-    // eager = false: the cut happens when the FIRST ACTION runs, not at
-    // DataFrame construction — merely building the query (plan dumps,
-    // schema inspection, registry iteration) must not launch Spark jobs.
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
+    // standard iterative-algorithm bargain (see [[cut]]).
     val e = cut(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull))
     val nodes = cut(e.select(col("src").as("node"))
@@ -126,11 +125,9 @@ object Graph {
     * 0/teleport literal column, no extra join in the loop. Output:
     * (node, rank) — nodes the seeds never reach hold rank 0. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iterations: Int, materialize: Boolean = true): DataFrame = {
+      iterations: Int): DataFrame = {
     require(iterations >= 1,
       "personalizedPageRank needs at least one iteration")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
     val e = cut(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull))
     val inGraph = e.select(col("src").as("node"))
@@ -189,11 +186,8 @@ object Graph {
     * plus two 1-row total broadcasts; loop invariants
     * localCheckpoint-cut. Output: (node, hub, auth) — nodes outside
     * every edge direction hold 0 on that side. */
-  def hits(edges: DataFrame, iterations: Int,
-      materialize: Boolean = true): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
     val e = cut(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull).distinct())
     val nodes = cut(e.select(col("src").as("node"))
@@ -374,12 +368,10 @@ object Graph {
     * round d's plan doesn't re-derive rounds 1..d−1. maxDepth is a
     * small constant by contract (diameter probes, not transitive
     * closure). Output: (node, hops). */
-  def bfsLayers(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
-      materialize: Boolean = true): DataFrame = {
+  def bfsLayers(edges: DataFrame, seeds: DataFrame,
+      maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 16,
       s"bfsLayers needs 1 <= maxDepth <= 16, got $maxDepth")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
     val und = cut(orient(edges))
     val adj = cut(und.select(col("u").as("a"), col("v").as("b"))
       .union(und.select(col("v").as("a"), col("u").as("b"))))
@@ -440,12 +432,9 @@ object Graph {
     * lineage per round (the iterative-operator convention).
     *
     * Output: (node, label) — nodes sharing a label share a community. */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-      materialize: Boolean = true): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 8,
       s"labelPropagation needs 1 <= rounds <= 8, got $rounds")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
     val und = cut(edges
       .select(col("src").as("u"), col("dst").as("v"))
       .union(edges.select(col("dst").as("u"), col("src").as("v")))
@@ -469,13 +458,10 @@ object Graph {
     labels
   }
 
-  def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
-      materialize: Boolean = true): DataFrame = {
+  def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"kcorePeel needs k >= 1, got $k")
     require(rounds >= 1 && rounds <= 16,
       s"kcorePeel needs 1 <= rounds <= 16, got $rounds")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
     var e = cut(orient(edges))
     for (_ <- 1 to rounds) {
       val deg = e.select(col("u").as("node"))

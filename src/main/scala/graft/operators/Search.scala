@@ -143,7 +143,7 @@ object Search {
     * query against the stored index; rebuilding it inline per query
     * re-pays the corpus scan per plan branch (the convenience
     * [[tfIdfCosineTopK]] overload materializes it for exactly that
-    * reason — measured 4× end-to-end on the ScaleProbe corpus).
+    * reason — measured 4× end-to-end on the scale-probe corpus).
     *
     * `maxDf` caps posting fanout for corpus-common terms (a stop word
     * joins every document pair; its idf ≈ ln(1) ≈ 0 contributes nothing,
@@ -215,7 +215,7 @@ object Search {
   /** Convenience form: build the index inline and query it. The built
     * index is `localCheckpoint`ed (eager) before the four downstream
     * branches consume it — without that, each branch re-runs the full
-    * tokenize → postings → df_t pipeline (ScaleProbe measured 86 s →
+    * tokenize → postings → df_t pipeline (the scale probe measured 86 s →
     * ~23 s on 110k docs). Long-lived callers should [[tfIdfVectors]] →
     * write parquet → [[tfIdfCosineTopKIndexed]] instead; the checkpoint
     * occupies executor storage until the session drops it. */

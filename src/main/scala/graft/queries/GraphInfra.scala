@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * mod 40 even made the first generator pure self-loops): zero
   * triangles, perfectly uniform PageRank, an oracle check that
   * validated nothing. Pseudo-random fixtures need real hashing — the
-  * same lesson ScaleProbe's graph stage records.
+  * same lesson the scale probe's graph stage records.
   */
 object GraphInfra {
 

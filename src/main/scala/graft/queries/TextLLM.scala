@@ -491,7 +491,7 @@ object TextLLM {
     // band buckets, the mega-bucket cap, exact-Jaccard verification — has
     // a DuckDB mirror, so the driver's oracle checks the WHOLE pipeline.
     // The xxhash64 family stays the operator default (8-byte shuffle keys)
-    // and is covered by LlmOperatorsSpec + ScaleProbe.
+    // and is covered by LlmOperatorsSpec + `Probe scale`.
     Dedup.minhashNearDups(docsWithNearDups(s, dir), col("doc_id"), col("text"),
         shingleK = 3, numHashes = 24, bands = 8, minJaccard = 0.5,
         family = Dedup.Md5Minhash)
@@ -501,7 +501,7 @@ object TextLLM {
     // md5Hash60 token hashes (round 5): 60-bit simhash, 4×15-bit bands —
     // the whole pipeline (bit sums, banding, bucket cap, Hamming verify)
     // has a DuckDB mirror, so the oracle checks it end to end. xxhash64 /
-    // 64-bit stays the operator default (LlmOperatorsSpec + ScaleProbe).
+    // 64-bit stays the operator default (LlmOperatorsSpec + `Probe scale`).
     // lazy localCheckpoint (r16): sigs feeds the banded candidates AND
     // both verify joins — three plannings of the scan→tokenize→md5→
     // 60-conditional-sum pipeline without the cut; the checkpoint
@@ -976,7 +976,7 @@ object TextLLM {
     // gramHash=md5: min-over-hex-strings is identical in DuckDB, so the
     // registered query is oracle-checked end to end (round 5; xxhash64
     // stays the operator default for 8-byte shuffle keys at scale, and is
-    // exercised by LlmOperatorsSpec + ScaleProbe). r16: via the JVM fast
+    // exercised by LlmOperatorsSpec + `Probe scale`). r16: via the JVM fast
     // path [[TA.rollingMinMd5]] — bit-identical by spec test + oracle;
     // the explode form paid ~len(t) md5+string rows per doc through a
     // Generate and an aggregate (3.03 s → sub-second isolated).

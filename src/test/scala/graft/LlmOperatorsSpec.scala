@@ -111,6 +111,27 @@ class LlmOperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(12L) == ((1L, 0L, 0L, 0.0)))
   }
 
+  test("NgramLm bigram udf compiles with codegen fallback off") {
+    import graft.operators.NgramLm
+    val ref = docsDf((0L, "a b a b c"), (1L, "b c"))
+    val scored = docsDf((10L, "a b c d"), (11L, "x"))
+    // a Janino compile failure now throws, in whole-stage code and in
+    // the projections built outside it
+    val strict = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    strict.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val counts = NgramLm.bigramCounts(ref, col("text")).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(counts == Map(("a", "b") -> 2L, ("b", "a") -> 1L, ("b", "c") -> 2L))
+      val stats = NgramLm.transitionStats(scored, col("doc_id"), col("text"),
+          ref, col("text"))
+        .collect().map(r => r.getLong(0) ->
+          (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
+      assert(stats == Map(10L -> ((3L, 2L, 2L, 2.0 / 3))))
+    } finally strict.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("NgramLm.perplexity: in-domain text beats gibberish; matches a naive replay") {
     import graft.operators.NgramLm
     val refText = "the cat sat on the mat and the dog sat on the rug"
@@ -521,6 +542,25 @@ class LlmOperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       minQuality = 0.2, minJaccard = 0.5,
       mixtureRates = Map("keep" -> 1.0, "drop" -> 0.0))
     assert(out2.select("doc_id").distinct().collect().map(_.getLong(0)).toSet == Set(1L))
+    // fractional rate over 30 distinct docs plus 10 exact copies (ids
+    // 101–110 copy 1–10): the written ids are exactly the dedup
+    // survivors (1–30) that pass the md5 rule — a copy never stands in
+    // for a sampled-out original
+    val many = docsDf((1L to 30L).map(i =>
+        i -> (1 to 40).map(j => s"d${i}w$j the of and to").mkString(" ")): _*)
+    val manyDf = many.unionByName(many.filter(col("doc_id") <= 10L)
+        .withColumn("doc_id", col("doc_id") + 100L))
+      .withColumn("source", when(col("doc_id") % 2 === 0, "half").otherwise("all"))
+    val out3 = "/tmp/graft_llm_curate_mix_half"
+    LlmPipeline.curate(manyDf, col("doc_id"), col("text"), out3,
+      maxTokens = 64, overlap = 8, minQuality = 0.2, minJaccard = 0.5,
+      mixtureRates = Map("half" -> 0.5))
+    def md5Hex8(id: Long) = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).take(4).map(b => f"$b%02x").mkString
+    val expected = (1L to 30L).filter(i => i % 2 == 1 || md5Hex8(i) < "80000000").toSet
+    assert(expected.size > 15 && expected.size < 30) // the rule keeps some, not all
+    assert(spark.read.parquet(out3).select("doc_id").distinct().collect()
+      .map(_.getLong(0)).toSet == expected)
   }
 
   test("LlmPipeline.curate: URL dedup and fuzzy decontamination stages compose") {
