@@ -68,7 +68,9 @@ object Pipeline {
     * `>` header lines per protein: the text source's partition discovery
     * finds the `protein=<p>` dirs through the Hadoop `FileSystem` (so
     * file://, hdfs:// and s3a:// all work), and the explicit schema keeps
-    * the partition value a string (`protein=7` is `"7"`, not 7). */
+    * the partition value a string (`protein=7` is `"7"`, not 7). The
+    * few result rows come back in one partition, sorted inside its task
+    * ([[plans.OneTaskSort]]) rather than through a range exchange. */
   def stageCounts(spark: SparkSession, fastaPath: String, outDir: String,
       metaWithVariants: Map[String, DataFrame] = Map.empty,
       weeklyMatrix: Map[String, DataFrame] = Map.empty,
@@ -100,6 +102,7 @@ object Pipeline {
     (Seq(raw, filtered, clustered) ++ metaLinked ++ tsTotals)
       .reduce(_ unionByName _)
       .orderBy("stage", "protein")
+      .coalesce(1)
   }
 
   /** The `clusters` table [[prepare]] writes. */
@@ -133,14 +136,17 @@ object Pipeline {
     val events = VariantCalling.callAll(aligned, refSeq)
       .filter(col("clusterId") =!= refClusterId).cache()
     try {
-      // stage 7: report fan-out off the cached events
-      Sinks.writeCsv(VariantCalling.toRawTsvShape(events),
-        s"$outDir/variants_raw", sep = "\t")
+      // stage 7: report fan-out off the cached events. The first action
+      // over the cache builds it in the stage that first reads it, so that
+      // is info_by_cluster's partial aggregate (one task per MSA split),
+      // not the exchange-free variants_raw write (one task in all)
       Sinks.writeBlockReport(
         Reports.infoByCluster(events).select(
           concat(col("cluster_id"), lit(", "), col("cluster_size"),
             lit(" sequences")).as("hdr"), col("codes")),
         "hdr", "codes", s"$outDir/info_by_cluster")
+      Sinks.writeCsv(VariantCalling.toRawTsvShape(events),
+        s"$outDir/variants_raw", sep = "\t")
       Sinks.writeCsv(Reports.mutationCsv(events, total), s"$outDir/all_by_code")
       Sinks.writeCsv(Reports.perPositionTable(events, refSeq.replace("-", ""), total),
         s"$outDir/per_position")
@@ -155,12 +161,13 @@ object Pipeline {
       // stage 8b: the reference's styled heatmap table (S10,
       // Time_Series.py:813–837) over the Worldwide share matrix — week
       // columns are report-bounded, so the explicit pivot value list and
-      // the xlsx sink's driver-side collect are safe by construction
+      // the xlsx sink's driver-side collect are safe by construction; the
+      // week list is collected from one partition, sorted in its task
       val global = Sinks.readCsv(spark, s"$outDir/weekly_matrix",
           VariantTimeSeries.WeeklyMatrixSchema)
         .filter(col("region") === "Worldwide")
       val weeks = global.select("week_start").distinct()
-        .orderBy("week_start").collect().map(_.get(0).toString)
+        .orderBy("week_start").coalesce(1).collect().map(_.get(0).toString)
       if (weeks.nonEmpty)
         graft.sinks.Xlsx.writeHeatmap(
           global.groupBy("code").pivot("week_start", weeks.toSeq)

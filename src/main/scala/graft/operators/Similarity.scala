@@ -147,7 +147,10 @@ object Similarity {
     // precomputed norms and the 0-denominator guard, score =
     // λ·cos − (1−λ)·maxSim in that IEEE order, ties (score equal) break
     // to the smaller nid, selection stops when no unselected candidate
-    // remains — selections replay engine-portably, same as before.
+    // remains. A NaN score compares false both ways, so a NaN-scored
+    // candidate is never selected (a round where every unselected
+    // candidate scores NaN ends the selection early); a null cosine
+    // throws when the udf reads it.
     collected
       .withColumn("__sel", mmrSelectUdf(k, lambda)(col("__cv")))
       .select(col(queryId), posexplode(col("__sel")))

@@ -101,8 +101,9 @@ case class VectorDot(left: Expression, right: Expression)
 /** SparkSessionExtensions hook: registers `graft_vector_dot` and
   * `variant_events` so the expressions are callable from SQL and
   * `call_function`, plus the broadcast range-join rewrite (optimizer rule
-  * + planner strategy, [[RangeJoin]]). Wired in GraftSession via
-  * `.withExtensions`. */
+  * + planner strategy, [[RangeJoin]]) and the one-task sort of an ordered
+  * frame that ends in one partition (optimizer rule, [[OneTaskSort]]).
+  * Wired in GraftSession via `.withExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -148,6 +149,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[VariantEventsGenerator].getName, "variant_events"),
       (children: Seq[Expression]) => VariantEventsGenerator(children)))
     ext.injectOptimizerRule(RangeJoin.rule)
+    ext.injectOptimizerRule(_ => OneTaskSort)
     ext.injectPlannerStrategy(RangeJoin.strategy)
   }
 }

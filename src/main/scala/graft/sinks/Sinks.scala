@@ -20,7 +20,16 @@ object Sinks {
 
   /** S8 — single-file CSV with header, matching the reference's
     * one-file-per-report contract (`/root/reference/Time_Series.py:671`).
-    * `coalesce(1)` only touches the (small, already-aggregated) result. */
+    * One file, rows in `df`'s order: an ordered `df` ends in one
+    * partition, so [[graft.plans.OneTaskSort]] sorts it inside the writing
+    * task instead of through a range exchange and its sampling job — but
+    * only when the sort's input is post-shuffle work (an aggregate, a
+    * partitioned window, a shuffling repartition) or a small local
+    * relation. Any other input (a scan, a cache build, an RDD, an
+    * aggregate over a bucketed table) keeps the range exchange, so its
+    * stages stay parallel; an unordered `df` is
+    * coalesced as it is, so whatever has no exchange below it runs in the
+    * one writing task. */
   def writeCsv(df: DataFrame, path: String, sep: String = ","): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite)
       .option("header", "true").option("sep", sep).csv(path)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Whole-pipeline acceptance: raw FASTA → filter/dedup, then MSA →
   * reports + weekly matrices, exercising every stage a reference user
   * runs (`/root/reference/README.md` flow). */
@@ -239,5 +241,56 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(c => String.valueOf(c.getMessage).contains("all-gap reference row")))
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("analyzeMsa: the variant caller runs one task per MSA split") {
+    import spark.implicits._
+    // a seeded 61-cluster alignment, ~14 kB: 4 kB splits cut it in several
+    val rng = new scala.util.Random(11)
+    val aa = "ACDEFGHIKLMNPQRSTVWY"
+    val ref = Array.fill(200)(aa(rng.nextInt(aa.length)))
+    val msa = new StringBuilder(s">clust0;size=1;\n${ref.mkString}\n")
+    for (c <- 1 to 60) {
+      val seq = ref.clone()
+      for (_ <- 1 to 2) seq(rng.nextInt(seq.length)) = aa(rng.nextInt(aa.length))
+      msa.append(s">Uniq$c;size=${1 + c % 4};\n${seq.mkString}\n")
+    }
+    val msaPath = "/tmp/graft_pipe_split_msa.fasta"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(msaPath), msa.toString)
+    val clusterMap = (Seq(("WIV04-ref", "clust0")) ++
+      (1 to 60).map(c => (s"EPI_$c", s"Uniq$c"))).toDF("accession", "cluster_id")
+    val meta = (1 to 60).map(c => (s"EPI_$c", f"2021-01-${1 + c % 28}%02d", "Europe"))
+      .toDF("accession", "date", "region")
+
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val maxSplit = "mapreduce.input.fileinputformat.split.maxsize"
+    // stage id -> (tasks, whether the stage reads a persisted RDD)
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Boolean)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        stages.put(e.stageInfo.stageId, (e.stageInfo.numTasks,
+          e.stageInfo.rddInfos.exists(_.storageLevel.isValid)))
+    }
+    hadoop.set(maxSplit, "4096")
+    try {
+      val splits = VariantCalling.readMsa(spark, msaPath).rdd.getNumPartitions
+      assert(splits > 1, "the fixture must read in several splits")
+      spark.sparkContext.addSparkListener(listener)
+      Pipeline.analyzeMsa(spark, msaPath, "WIV04-ref", meta, clusterMap,
+        "/tmp/graft_pipe_split_out")
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      // the first stage over the events cache builds it: it must call
+      // variants in parallel, one task per split, not in one task
+      val cacheReads = stages.asScala.toSeq.sortBy(_._1).collect {
+        case (id, (tasks, true)) => id -> tasks }
+      assert(cacheReads.nonEmpty, "no stage read the events cache")
+      assert(cacheReads.head._2 == splits,
+        s"the stage that builds the events cache ran ${cacheReads.head._2} " +
+          s"task(s) over $splits splits; cache reads (stage -> tasks): $cacheReads")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      hadoop.unset(maxSplit)
+    }
   }
 }

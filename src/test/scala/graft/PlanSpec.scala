@@ -1,8 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan regression tests: the scale properties the operators are
   * designed around (broadcasts stay broadcasts, filters reach the scan,
@@ -129,10 +135,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // executed plan share ONE underlying RDD id, and no consumer re-runs
     // its own range shuffle.
     ranked.collect()
-    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.RDDScanExec
     import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     def walk(p: SparkPlan): Seq[SparkPlan] = {
       val kids = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -348,5 +352,131 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = df.queryExecution.executedPlan.toString
     // codegen'd operators print with the `*(stageId)` prefix
     assert(p.contains("*(1) HashAggregate"), s"hot path fell out of codegen:\n$p")
+  }
+
+  /** Walks executed plans through AQE's final plan and query stages. */
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def rangeExchanges(p: SparkPlan): Seq[SparkPlan] = Aqe.collect(p) {
+    case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+  }
+
+  /** Partition-local sorts straight over a one-partition coalesce: the
+    * shape [[graft.plans.OneTaskSort]] plans an ordered one-file frame as. */
+  private def oneTaskSorts(p: SparkPlan): Seq[SparkPlan] = Aqe.collect(p) {
+    case s: SortExec if !s.global && (s.child match {
+      case c: CoalesceExec => c.numPartitions == 1
+      case InputAdapter(c: CoalesceExec) => c.numPartitions == 1
+      case _ => false
+    }) => s
+  }
+
+  /** The executed plan of every action `body` runs. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  test("GISAID spine: the ordered one-file frames sort in one task, no range exchange") {
+    import spark.implicits._
+    val in = "/tmp/graft_plan_spine.fasta"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(in), Seq(
+      "EPI_1" -> "MLVFLVLLPLVSS", "EPI_2" -> "MLVFLVLLPLVSS",
+      "EPI_3" -> "MFLVLLPLVSS", "EPI_4" -> "MFVFLVLLPLKVSS").map { case (acc, seq) =>
+        s">Spike|iso/$acc|2021-01-01|$acc|o|l|Human\n$seq\n" }.mkString)
+    val out = "/tmp/graft_plan_spine_out"
+    Pipeline.prepare(spark, in, out, refLenByProtein = Map("Spike" -> 13),
+      lengthDelta = 3, ambiguityCutoff = 0.1)
+    val msaPath = "/tmp/graft_plan_spine_msa.fasta"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(msaPath),
+      """>clust0;size=1;
+        |MFVFLVLLPL-VSS
+        |>Uniq1;size=2;
+        |MLVFLVLLPL-VSS
+        |>Uniq2;size=1;
+        |MF--LVLLPL-VSS
+        |>Uniq3;size=1;
+        |MFVFLVLLPLKVSS
+        |""".stripMargin)
+    val clusterMap = Seq(("WIV04-ref", "clust0"), ("EPI_1", "Uniq1"),
+      ("EPI_2", "Uniq1"), ("EPI_3", "Uniq2"), ("EPI_4", "Uniq3"))
+      .toDF("accession", "cluster_id")
+    val meta = Seq(("EPI_1", "2021-01-03", "Europe"), ("EPI_2", "2021-01-05", "Asia"),
+      ("EPI_3", "2021-01-12", "Europe"), ("EPI_4", "2021-01-13", "Asia"))
+      .toDF("accession", "date", "region")
+
+    val plans = executedPlans {
+      Pipeline.analyzeMsa(spark, msaPath, "WIV04-ref", meta, clusterMap, out)
+      Pipeline.stageCounts(spark, in, out, metaWithVariants = Map("Spike" -> meta),
+        weeklyMatrix = Map("Spike" -> graft.sinks.Sinks.readCsv(spark,
+          s"$out/weekly_matrix", graft.operators.VariantTimeSeries.WeeklyMatrixSchema)),
+        trimHead = 1).collect()
+    }
+    val ranged = plans.filter(rangeExchanges(_).nonEmpty)
+    assert(ranged.isEmpty, s"range exchanges left in the spine:\n${ranged.mkString("\n")}")
+    // info_by_cluster, all_by_code, per_position, pymol, weekly_matrix, the
+    // heatmap's week list, weekly_combos and the stage counts
+    val sorted = plans.count(oneTaskSorts(_).nonEmpty)
+    assert(sorted >= 7, s"only $sorted one-task sorts in:\n${plans.mkString("\n")}")
+  }
+
+  test("an ordered one-file frame over a scan keeps its range exchange and parallel scan") {
+    val path = "/tmp/graft_plan_sorted_scan"
+    val data = spark.range(0, 4000, 1, 4).selectExpr("id", "id % 97 AS k")
+    data.write.mode("overwrite").parquet(path)
+    val scan = spark.read.parquet(path)
+    val scanParts = scan.rdd.getNumPartitions
+    assert(scanParts > 1, "the fixture must scan in several partitions")
+    spark.sql("DROP TABLE IF EXISTS sorted_scan_b")
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File("/tmp/graft_warehouse/sorted_scan_b"))
+    graft.sinks.Bucketed.writeBucketed(data, "sorted_scan_b", "k", buckets = 4)
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        stageTasks.add(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // a bare scan, and an aggregate that reads its bucketed input with no
+    // exchange: either sorted in one task would scan in that task
+    try for ((ordered, parallel) <- Seq(
+        scan.orderBy("k", "id").coalesce(1) -> scanParts,
+        spark.table("sorted_scan_b").groupBy("k").count().orderBy("k").coalesce(1) -> 4)) {
+      stageTasks.clear()
+      assert(ordered.collect().nonEmpty)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      val p = ordered.queryExecution.executedPlan
+      assert(rangeExchanges(p).nonEmpty && oneTaskSorts(p).isEmpty,
+        s"this sort must keep its range exchange:\n$p")
+      assert(stageTasks.asScala.exists(_ == parallel),
+        s"no stage scanned the $parallel partitions in parallel: ${stageTasks.asScala}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("orderBy + coalesce(1) over an aggregate equals the global sort row for row") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val rng = new scala.util.Random(5)
+    val df = Seq.fill(5000)((rng.nextInt(300), rng.nextInt(1000))).toDF("k", "v")
+      .repartition(6)
+    val agg = df.groupBy("k").agg(sum("v").as("s"), count(lit(1)).as("n"))
+    val ordered = agg.orderBy(col("n").desc, col("k"))
+    val oneFile = ordered.coalesce(1)
+    assert(oneFile.collect().toSeq == ordered.collect().toSeq)
+    val p = oneFile.queryExecution.executedPlan
+    assert(rangeExchanges(p).isEmpty && oneTaskSorts(p).nonEmpty,
+      s"expected a one-task sort:\n$p")
   }
 }
