@@ -57,9 +57,10 @@ object Pipeline {
     *     after head/tail week trimming ("Metadata-Sequence Pairs Included
     *     in Time Series Analysis", `Sequence_Counter.py:205–241`)
     *
-    * Stages 4–5 consume the in-flight per-protein frames (the reference
-    * re-reads its own TSV/CSV products; here the caller passes the same
-    * frames it is about to sink, so the counts stay one job, no re-scan).
+    * Stages 4–5 consume the per-protein frames the caller passes: an
+    * in-flight frame or a product read back from its file, as the
+    * reference re-reads its own TSV/CSV products (the GISAID spine passes
+    * the weekly matrix read back from its CSV, so no aggregate re-runs).
     * One row per (stage, protein); a `null` protein carries a cross-protein
     * total (the raw file predates the protein split).
     *
@@ -159,15 +160,17 @@ object Pipeline {
       Sinks.writeCsv(VariantTimeSeries.weeklyMatrix(joined)
         .orderBy("region", "code", "week_start"), s"$outDir/weekly_matrix")
       // stage 8b: the reference's styled heatmap table (S10,
-      // Time_Series.py:813–837) over the Worldwide share matrix — week
+      // Time_Series.py:813–837) over the Worldwide share matrix. Week
       // columns are report-bounded, so the explicit pivot value list and
-      // the xlsx sink's driver-side collect are safe by construction; the
-      // week list is collected from one partition, sorted in its task
+      // the xlsx sink's driver-side collect (under its row guard) are safe
+      // by construction. The matrix is one file, so its Worldwide rows are
+      // read into one partition: the week list and the pivot then plan no
+      // exchange
       val global = Sinks.readCsv(spark, s"$outDir/weekly_matrix",
           VariantTimeSeries.WeeklyMatrixSchema)
-        .filter(col("region") === "Worldwide")
+        .filter(col("region") === "Worldwide").coalesce(1)
       val weeks = global.select("week_start").distinct()
-        .orderBy("week_start").coalesce(1).collect().map(_.get(0).toString)
+        .orderBy("week_start").collect().map(_.get(0).toString)
       if (weeks.nonEmpty)
         graft.sinks.Xlsx.writeHeatmap(
           global.groupBy("code").pivot("week_start", weeks.toSeq)

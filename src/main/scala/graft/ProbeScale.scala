@@ -143,7 +143,8 @@ private[graft] object ProbeScale {
     // products: O(ref_len × events) Python loops per report
     // (MSA_Reader.py) and O(weeks × continents × rows) for the series
     // (Time_Series.py); here each report is one exchange over the
-    // cached events and the matrix is one Expand-style shuffle. ----
+    // cached events and the matrix shuffles its genome rows once, as
+    // (region, week, cluster) keys with no code list. ----
     lazy val events = VariantCalling.callAll(aligned, ref).cache()
     stage("domain_call_and_cache", "gen_fasta_write") { events.count() }
     lazy val totalSeqs = aligned.agg(sum(col("clusterSize"))).head().getLong(0)
@@ -176,10 +177,9 @@ private[graft] object ProbeScale {
     lazy val clusterMap = spark.range(nSeqs * 2L).select(
       concat(lit("acc"), col("id")).as("accession"),
       concat(lit("Uniq"), pmod(col("id"), lit(nSeqs))).as("cluster_id"))
-    stage("domain_weekly_matrix_one_shuffle", "domain_total_seqs") {
-      VariantTimeSeries.weeklyMatrix(
-        VariantTimeSeries.joinMetadata(meta, clusterMap, perCluster))
-        .count()
+    shuffled("domain_weekly_matrix_one_shuffle", "domain_total_seqs") {
+      exec(VariantTimeSeries.weeklyMatrix(
+        VariantTimeSeries.joinMetadata(meta, clusterMap, perCluster)))
     }
 
     // ---- attribution / survival at event scale: 1M users × 6 touches

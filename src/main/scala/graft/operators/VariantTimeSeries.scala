@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.VariantEvent
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The metadata/time-series half of the pipeline (SURVEY.md §3.2):
@@ -50,8 +51,9 @@ object VariantTimeSeries {
       .groupBy(col("clusterId").as("cluster_id"))
       .agg(sum(col("aa")).as("aa_changes"))
 
-  /** J1+J2 — metadata ⋈ cluster map (inner, both large → sort-merge) then
-    * ⋈ per-cluster variants (small → broadcast), plus F4 singleton
+  /** J1+J2 — metadata ⋈ cluster map (inner; sort-merge when both sides
+    * are large, while at report sizes the planner broadcasts one of them)
+    * then ⋈ per-cluster variants (small → broadcast), plus F4 singleton
     * exclusion and F5 date validity
     * (`/root/reference/Time_Series.py:469–675`).
     *
@@ -73,27 +75,47 @@ object VariantTimeSeries {
   /** A5+A6+A7 — the full weekly matrix in long form, every continent AND
     * Worldwide together (`/root/reference/Time_Series.py:731–811, 868–897`).
     *
-    * The region dimension is expanded Expand-style (each row contributes
-    * itself + a `Worldwide` copy — exactly what GROUPING SETS does
-    * physically) so one shuffle computes all regions; per-week totals and
-    * zero-mutation counts are a second, tiny aggregate broadcast back onto
-    * the code frequencies. Output columns: region, week_start, code, freq,
-    * total_genomes (the week's row count = `Total_Genomes`),
-    * zero_mutations (= `Zero_Mutations_in_<p>`), share. */
+    * Input contract: `variants` is a function of `cluster_id`, as in every
+    * frame [[joinMetadata]] builds. So the genome rows cross ONE data
+    * exchange as counts, not codes:
+    *  - each row is projected to `(region, week_start, cluster_id)` with
+    *    no list, once as itself and once as a `Worldwide` copy;
+    *  - the rows are hash-partitioned on `(region, week_start)` and
+    *    counted per `(region, week_start, cluster_id)`;
+    *  - each cluster's list comes back through a broadcast of the
+    *    distinct `(cluster_id, variants)` pairs, one per cluster by the
+    *    contract;
+    *  - the week's `total_genomes` and `zero_mutations` are sums of those
+    *    cluster counts over `(region, week_start)`;
+    *  - the codes are exploded and counted per
+    *    `(region, week_start, code)` in the same partitions, which the
+    *    `(region, week_start)` hashing already groups.
+    *
+    * Output columns: region, week_start, code, freq, total_genomes (the
+    * week's row count = `Total_Genomes`), zero_mutations
+    * (= `Zero_Mutations_in_<p>`), share. */
   def weeklyMatrix(joined: DataFrame): DataFrame = {
-    val expanded = joined
-      .withColumn("region", explode(array(col("region"), lit("Worldwide"))))
-      .withColumn("week_start", TimeSeries.weekStart(col("date")))
-    val totals = expanded.groupBy("region", "week_start")
-      .agg(count(lit(1)).as("total_genomes"),
-        sum(when(size(col("variants")) === 0, 1).otherwise(0)).as("zero_mutations"))
-    val freqs = expanded
-      .select(col("region"), col("week_start"), explode(col("variants")).as("code"))
-      .groupBy("region", "week_start", "code")
-      .agg(count(lit(1)).as("freq"))
-    freqs.join(broadcast(totals), Seq("region", "week_start"))
-      .withColumn("share", when(col("total_genomes") === 0, 0.0)
-        .otherwise(col("freq").cast("double") / col("total_genomes")))
+    val week = Window.partitionBy("region", "week_start")
+    val lists = joined.select("cluster_id", "variants").distinct()
+    joined
+      .select(explode(array(col("region"), lit("Worldwide"))).as("region"),
+        TimeSeries.weekStart(col("date")).as("week_start"), col("cluster_id"))
+      .repartition(col("region"), col("week_start"))
+      .groupBy("region", "week_start", "cluster_id")
+      .agg(count(lit(1)).as("n"))
+      .join(broadcast(lists), Seq("cluster_id"))
+      .select(col("region"), col("week_start"), col("variants"), col("n"),
+        sum(col("n")).over(week).as("total_genomes"),
+        sum(when(size(col("variants")) === 0, col("n")).otherwise(0L)).over(week)
+          .as("zero_mutations"))
+      .select(col("region"), col("week_start"), explode(col("variants")).as("code"),
+        col("n"), col("total_genomes"), col("zero_mutations"))
+      .groupBy("region", "week_start", "code", "total_genomes", "zero_mutations")
+      .agg(sum(col("n")).as("freq"))
+      .select(col("region"), col("week_start"), col("code"), col("freq"),
+        col("total_genomes"), col("zero_mutations"),
+        // a week with a code row has at least that row's genomes
+        (col("freq").cast("double") / col("total_genomes")).as("share"))
   }
 
   /** The [[weeklyMatrix]] columns and types, for reading its CSV back. */

@@ -152,6 +152,67 @@ class DomainPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(w1.getAs[Double]("share") == 2.0 / 3.0)
   }
 
+  test("weeklyMatrix equals the exploded-codes formulation row for row, share bit for bit") {
+    import spark.implicits._
+    // the formulation that shuffles every genome's codes: the region Expand,
+    // a totals aggregate and an explode/count aggregate, joined on a
+    // broadcast of the totals
+    def exploded(joined: DataFrame): DataFrame = {
+      val expanded = joined
+        .withColumn("region", explode(array(col("region"), lit("Worldwide"))))
+        .withColumn("week_start", TimeSeries.weekStart(col("date")))
+      val totals = expanded.groupBy("region", "week_start")
+        .agg(count(lit(1)).as("total_genomes"),
+          sum(when(size(col("variants")) === 0, 1).otherwise(0)).as("zero_mutations"))
+      val freqs = expanded
+        .select(col("region"), col("week_start"), explode(col("variants")).as("code"))
+        .groupBy("region", "week_start", "code")
+        .agg(count(lit(1)).as("freq"))
+      freqs.join(broadcast(totals), Seq("region", "week_start"))
+        .withColumn("share", when(col("total_genomes") === 0, 0.0)
+          .otherwise(col("freq").cast("double") / col("total_genomes")))
+    }
+    val rng = new scala.util.Random(11)
+    val pool = (1 to 9).map(i => s"A${i}V")
+    // the empty-list reference cluster, a cluster that called no events
+    // (also an empty list) and ten clusters with lists drawn from the pool
+    val lists = Seq("clust0" -> Seq.empty[String], "Uniq0" -> Seq.empty[String]) ++
+      (1 to 10).map(c => s"Uniq$c" -> pool.filter(_ => rng.nextInt(3) == 0).sorted)
+    val regions = Seq("Africa", "Asia", "Europe", "Oceania")
+    val genomes = (1 to 240).map { i =>
+      (s"EPI$i", lists(rng.nextInt(lists.size))._1, regions(rng.nextInt(regions.size)),
+        java.time.LocalDate.parse("2021-01-01").plusDays(rng.nextInt(42)).toString)
+    }
+    val sizes = genomes.groupBy(_._2).map { case (c, g) => c -> g.size }
+    val per = lists.map { case (c, v) => (c, sizes.getOrElse(c, 0), v) }
+      .toDF("cluster_id", "cluster_size", "variants")
+    // EPI0's cluster is absent from `per`, so F4 drops it
+    val clusterMap = (("EPI0", "UniqGone") +: genomes.map(g => (g._1, g._2)))
+      .toDF("accession", "cluster_id")
+    val meta = (("EPI0", "2021-01-05", "Asia") +: genomes.map(g => (g._1, g._4, g._3)))
+      .toDF("accession", "date", "region").repartition(4)
+    val joined = VariantTimeSeries.joinMetadata(meta, clusterMap, per)
+
+    val spread = joined.groupBy("cluster_id").agg(
+      countDistinct(col("region")).as("r"),
+      countDistinct(TimeSeries.weekStart(col("date"))).as("w"),
+      count(lit(1)).as("n")).collect()
+    assert(spread.length == lists.size && spread.forall(r => r.getLong(3) > 1 &&
+      r.getLong(1) > 1 && r.getLong(2) > 1), "every cluster spans regions and weeks")
+
+    def rows(df: DataFrame) = df.orderBy("region", "week_start", "code").collect()
+      .map(r => (r.getString(0), r.getDate(1).toString, r.getString(2), r.getLong(3),
+        r.getLong(4), r.getLong(5), java.lang.Double.doubleToRawLongBits(r.getDouble(6))))
+      .toSeq
+    val (got, want) = (VariantTimeSeries.weeklyMatrix(joined), exploded(joined))
+    assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)))
+    val gotRows = rows(got)
+    assert(gotRows == rows(want))
+    assert(gotRows.map(_._1).toSet == regions.toSet + "Worldwide")
+    assert(gotRows.map(_._2).distinct.size >= 6)
+    assert(gotRows.exists(_._6 > 0), "no week counts a zero-mutation genome")
+  }
+
   test("trimmedWeeklyTotal drops head/tail weeks before summing (A15)") {
     import spark.implicits._
     val matrix = Seq(

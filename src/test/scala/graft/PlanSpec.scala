@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, InputAdapter, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
@@ -371,6 +374,22 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }) => s
   }
 
+  /** The hash keys of every shuffle exchange in `p`, by column name. */
+  private def hashKeys(p: SparkPlan): Seq[Seq[String]] = Aqe.collect(p) {
+    case ShuffleExchangeExec(h: HashPartitioning, _, _, _) =>
+      h.expressions.map { case a: Attribute => a.name; case e => e.sql }
+  }
+
+  /** Whether `p` writes files into a directory named `dir`. */
+  private def writesTo(p: SparkPlan, dir: String): Boolean = Aqe.collect(p) {
+    case DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _) => i.outputPath
+  }.exists(_.getName == dir)
+
+  /** Whether `p` scans files under a directory named `dir`. */
+  private def scans(p: SparkPlan, dir: String): Boolean = Aqe.collect(p) {
+    case s: FileSourceScanExec => s.relation.location.rootPaths
+  }.flatten.exists(_.getName == dir)
+
   /** The executed plan of every action `body` runs. */
   private def executedPlans(body: => Unit): Seq[SparkPlan] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
@@ -416,8 +435,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("EPI_3", "2021-01-12", "Europe"), ("EPI_4", "2021-01-13", "Asia"))
       .toDF("accession", "date", "region")
 
-    val plans = executedPlans {
+    val msaPlans = executedPlans {
       Pipeline.analyzeMsa(spark, msaPath, "WIV04-ref", meta, clusterMap, out)
+    }
+    val plans = msaPlans ++ executedPlans {
       Pipeline.stageCounts(spark, in, out, metaWithVariants = Map("Spike" -> meta),
         weeklyMatrix = Map("Spike" -> graft.sinks.Sinks.readCsv(spark,
           s"$out/weekly_matrix", graft.operators.VariantTimeSeries.WeeklyMatrixSchema)),
@@ -425,10 +446,25 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val ranged = plans.filter(rangeExchanges(_).nonEmpty)
     assert(ranged.isEmpty, s"range exchanges left in the spine:\n${ranged.mkString("\n")}")
-    // info_by_cluster, all_by_code, per_position, pymol, weekly_matrix, the
-    // heatmap's week list, weekly_combos and the stage counts
+    // info_by_cluster, all_by_code, per_position, pymol, weekly_matrix,
+    // weekly_combos and the stage counts
     val sorted = plans.count(oneTaskSorts(_).nonEmpty)
     assert(sorted >= 7, s"only $sorted one-task sorts in:\n${plans.mkString("\n")}")
+
+    // the weekly matrix crosses one data exchange, on (region, week_start),
+    // as counts: no exchange is keyed on its codes
+    val matrix = msaPlans.filter(writesTo(_, "weekly_matrix"))
+    assert(matrix.size == 1, s"${matrix.size} weekly_matrix writes in:\n${msaPlans.mkString("\n")}")
+    val keys = hashKeys(matrix.head)
+    assert(!keys.exists(_.contains("code")), s"an exchange keyed on code:\n${matrix.head}")
+    assert(keys.count(_ == Seq("region", "week_start")) == 1,
+      s"not one (region, week_start) exchange in $keys:\n${matrix.head}")
+    // the heatmap's week list and pivot read the one-file matrix in one
+    // partition and shuffle nothing
+    val heatmap = msaPlans.filter(scans(_, "weekly_matrix"))
+    assert(heatmap.size == 2, s"${heatmap.size} heatmap collects")
+    val shuffled = heatmap.filter(Aqe.collect(_) { case e: ShuffleExchangeExec => e }.nonEmpty)
+    assert(shuffled.isEmpty, s"heatmap collects that shuffle:\n${shuffled.mkString("\n")}")
   }
 
   test("an ordered one-file frame over a scan keeps its range exchange and parallel scan") {
