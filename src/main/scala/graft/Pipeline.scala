@@ -163,12 +163,14 @@ object Pipeline {
       // Time_Series.py:813–837) over the Worldwide share matrix. Week
       // columns are report-bounded, so the explicit pivot value list and
       // the xlsx sink's driver-side collect (under its row guard) are safe
-      // by construction. The matrix is one file, so its Worldwide rows are
-      // read into one partition: the week list and the pivot then plan no
-      // exchange
+      // by construction. The Worldwide rows are read into one partition,
+      // so the week list and the pivot plan no exchange. That one task
+      // scans the whole matrix file (every split of it); the file was
+      // written by one task, so the scan is bounded by the write before it
       val global = Sinks.readCsv(spark, s"$outDir/weekly_matrix",
           VariantTimeSeries.WeeklyMatrixSchema)
-        .filter(col("region") === "Worldwide").coalesce(1)
+        .filter(col("region") === "Worldwide")
+        .select("week_start", "code", "share").coalesce(1)
       val weeks = global.select("week_start").distinct()
         .orderBy("week_start").collect().map(_.get(0).toString)
       if (weeks.nonEmpty)

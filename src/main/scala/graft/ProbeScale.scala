@@ -181,6 +181,34 @@ private[graft] object ProbeScale {
       exec(VariantTimeSeries.weeklyMatrix(
         VariantTimeSeries.joinMetadata(meta, clusterMap, perCluster)))
     }
+    // the shape Pipeline.analyzeMsa writes: the matrix sorted into one
+    // partition (Sinks.writeCsv's coalesce(1)), every row executed
+    shuffled("domain_weekly_matrix_ordered_one_file", "domain_total_seqs") {
+      exec(VariantTimeSeries.weeklyMatrix(
+        VariantTimeSeries.joinMetadata(meta, clusterMap, perCluster))
+        .orderBy("region", "code", "week_start").coalesce(1))
+    }
+    // the heatmap's read of the one-file matrix CSV (Pipeline.analyzeMsa):
+    // its Worldwide rows in one task, against the same rows scanned split
+    // by split; the CSV write itself is timed first
+    val matrixDir = "/tmp/graft_scale_weekly_matrix"
+    add(Own, "domain_weekly_matrix_csv", Seq("domain_total_seqs")) {
+      val (_, sec) = Probe.clock(graft.sinks.Sinks.writeCsv(
+        VariantTimeSeries.weeklyMatrix(
+          VariantTimeSeries.joinMetadata(meta, clusterMap, perCluster))
+          .orderBy("region", "code", "week_start"), matrixDir))
+      val lines = spark.read.text(matrixDir)
+      val (rows, splits) = (lines.count() - 1, lines.rdd.getNumPartitions)
+      println(f"""{"stage":"domain_weekly_matrix_csv","rows":$rows,"sec":$sec%.2f,"splits":$splits}""")
+      rows
+    }
+    lazy val worldwide = graft.sinks.Sinks.readCsv(spark, matrixDir,
+        VariantTimeSeries.WeeklyMatrixSchema)
+      .filter(col("region") === "Worldwide").select("week_start", "code", "share")
+    stage("domain_heatmap_rows_one_task", "domain_weekly_matrix_csv") {
+      exec(worldwide.coalesce(1))
+    }
+    stage("domain_heatmap_rows_parallel", "domain_weekly_matrix_csv") { exec(worldwide) }
 
     // ---- attribution / survival at event scale: 1M users × 6 touches
     // (6M rows). The point: both attribution operators are ONE

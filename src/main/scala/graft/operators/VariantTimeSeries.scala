@@ -77,11 +77,14 @@ object VariantTimeSeries {
     *
     * Input contract: `variants` is a function of `cluster_id`, as in every
     * frame [[joinMetadata]] builds. So the genome rows cross ONE data
-    * exchange as counts, not codes:
-    *  - each row is projected to `(region, week_start, cluster_id)` with
-    *    no list, once as itself and once as a `Worldwide` copy;
-    *  - the rows are hash-partitioned on `(region, week_start)` and
-    *    counted per `(region, week_start, cluster_id)`;
+    * exchange as keys with no code list, and are counted after it:
+    *  - each row is projected to `(region, week_start, cluster_id)`, once
+    *    as itself and once as a `Worldwide` copy;
+    *  - the keys are hash-partitioned on `(region, week_start)`, then
+    *    counted per `(region, week_start, cluster_id)`. The explicit
+    *    repartition leaves no partial count before the exchange, so the
+    *    shuffled rows scale with twice the genomes, not with the distinct
+    *    keys; in return, no second exchange regroups the counts by week;
     *  - each cluster's list comes back through a broadcast of the
     *    distinct `(cluster_id, variants)` pairs, one per cluster by the
     *    contract;
@@ -90,6 +93,11 @@ object VariantTimeSeries {
     *  - the codes are exploded and counted per
     *    `(region, week_start, code)` in the same partitions, which the
     *    `(region, week_start)` hashing already groups.
+    * All of that runs in the stage after the exchange, with as many tasks
+    * as `(region, week_start)` keys at most (≤ 7 × weeks). Its final
+    * aggregate plans no exchange, so an ordered one-file write moves the
+    * matrix rows into its one task through an exchange rather than
+    * coalescing that stage ([[graft.plans.OneTaskSort]]).
     *
     * Output columns: region, week_start, code, freq, total_genomes (the
     * week's row count = `Total_Genomes`), zero_mutations

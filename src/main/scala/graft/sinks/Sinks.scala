@@ -25,9 +25,12 @@ object Sinks {
     * task instead of through a range exchange and its sampling job — but
     * only when the sort's input is post-shuffle work (an aggregate, a
     * partitioned window, a shuffling repartition) or a small local
-    * relation. Any other input (a scan, a cache build, an RDD, an
-    * aggregate over a bucketed table) keeps the range exchange, so its
-    * stages stay parallel; an unordered `df` is
+    * relation. When that work is row-sized (an aggregate or window over
+    * rows an earlier exchange already clustered on its keys), the rows
+    * reach the writing task through an exchange into one partition, so
+    * that work keeps its parallel tasks. Any other input (a scan, a cache
+    * build, an RDD, an aggregate over a bucketed table) keeps the range
+    * exchange, so its stages stay parallel; an unordered `df` is
     * coalesced as it is, so whatever has no exchange below it runs in the
     * one writing task. */
   def writeCsv(df: DataFrame, path: String, sep: String = ","): Unit =

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, InputAdapter, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -364,14 +365,26 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
   }
 
-  /** Partition-local sorts straight over a one-partition coalesce: the
-    * shape [[graft.plans.OneTaskSort]] plans an ordered one-file frame as. */
+  /** Partition-local sorts straight over one partition: the shapes
+    * [[graft.plans.OneTaskSort]] plans an ordered one-file frame as, over
+    * a coalesce or over an exchange into one partition. */
   private def oneTaskSorts(p: SparkPlan): Seq[SparkPlan] = Aqe.collect(p) {
-    case s: SortExec if !s.global && (s.child match {
-      case c: CoalesceExec => c.numPartitions == 1
-      case InputAdapter(c: CoalesceExec) => c.numPartitions == 1
-      case _ => false
-    }) => s
+    case s: SortExec if !s.global && (coalescedToOne(s.child) || exchangedToOne(s.child)) => s
+  }
+
+  private def coalescedToOne(p: SparkPlan): Boolean = p match {
+    case c: CoalesceExec => c.numPartitions == 1
+    case InputAdapter(c) => coalescedToOne(c)
+    case _ => false
+  }
+
+  /** Whether `p` reads an exchange into one partition. */
+  private def exchangedToOne(p: SparkPlan): Boolean = p match {
+    case InputAdapter(c) => exchangedToOne(c)
+    case r: AQEShuffleReadExec => exchangedToOne(r.child)
+    case s: ShuffleQueryStageExec => exchangedToOne(s.plan)
+    case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+    case _ => false
   }
 
   /** The hash keys of every shuffle exchange in `p`, by column name. */
@@ -452,13 +465,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sorted >= 7, s"only $sorted one-task sorts in:\n${plans.mkString("\n")}")
 
     // the weekly matrix crosses one data exchange, on (region, week_start),
-    // as counts: no exchange is keyed on its codes
+    // as keys with no code list: no exchange is keyed on its codes
     val matrix = msaPlans.filter(writesTo(_, "weekly_matrix"))
     assert(matrix.size == 1, s"${matrix.size} weekly_matrix writes in:\n${msaPlans.mkString("\n")}")
     val keys = hashKeys(matrix.head)
     assert(!keys.exists(_.contains("code")), s"an exchange keyed on code:\n${matrix.head}")
     assert(keys.count(_ == Seq("region", "week_start")) == 1,
       s"not one (region, week_start) exchange in $keys:\n${matrix.head}")
+    // the stage that reads the (region, week_start) exchange counts,
+    // explodes and aggregates in parallel: an exchange into one partition,
+    // not a coalesce, feeds the writing task
+    val intoOne = Aqe.collect(matrix.head) {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+    }
+    assert(intoOne.size == 1 && hashKeys(intoOne.head).contains(Seq("region", "week_start")),
+      s"the (region, week_start) stage is not separated from the writing task:\n${matrix.head}")
     // the heatmap's week list and pivot read the one-file matrix in one
     // partition and shuffle nothing
     val heatmap = msaPlans.filter(scans(_, "weekly_matrix"))
@@ -514,5 +535,38 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = oneFile.queryExecution.executedPlan
     assert(rangeExchanges(p).isEmpty && oneTaskSorts(p).nonEmpty,
       s"expected a one-task sort:\n$p")
+  }
+
+  test("orderBy + coalesce(1) over an aggregate on clustered rows keeps that stage parallel") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val rng = new scala.util.Random(7)
+    val df = Seq.fill(5000)((rng.nextInt(40), rng.nextInt(30), rng.nextInt(1000)))
+      .toDF("k", "j", "v").repartition(3)
+    // the aggregate on (k, j) plans no exchange of its own: the
+    // repartition on k already clusters its rows
+    val agg = df.repartition(6, col("k")).groupBy("k", "j")
+      .agg(sum("v").as("s"), count(lit(1)).as("n"))
+    val ordered = agg.orderBy(col("n").desc, col("k"), col("j"))
+    val oneFile = ordered.coalesce(1)
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        stageTasks.add(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try assert(oneFile.collect().toSeq == ordered.collect().toSeq)
+    finally {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val p = oneFile.queryExecution.executedPlan
+    assert(rangeExchanges(p).isEmpty && oneTaskSorts(p).nonEmpty,
+      s"expected a one-task sort:\n$p")
+    assert(oneTaskSorts(p).forall(s => exchangedToOne(s.children.head)),
+      s"the aggregate's stage was coalesced into the sorting task:\n$p")
+    assert(stageTasks.asScala.exists(_ == 6),
+      s"no stage read the 6 clustered partitions in parallel: ${stageTasks.asScala}")
   }
 }
