@@ -2611,20 +2611,29 @@ object Stats {
       .groupBy((groupNames :+ "t").map(col): _*)
       .agg(sum(col("d")).as("d"), sum(col("c")).as("c"))
 
-  /** Finalize a (possibly merged) [[survivalCounts]] table into the
-    * [[kaplanMeier]] schema — the streaming-readout face. */
-  def kaplanMeierFromCounts(counts: DataFrame, groupCols: Seq[String],
-      maxTimes: Int = 1000): DataFrame = {
+  /** The per-group time grid every [[survivalCounts]] readout folds
+    * over: `__s` the ascending (t, d, c) structs, `__n` the subject
+    * total; a group with more than `maxTimes` distinct times fails
+    * fast. `name` is the readout named in the guards' messages. */
+  private def survivalGrid(counts: DataFrame, g: Seq[Column], name: String,
+      maxTimes: Int): DataFrame = {
     require(maxTimes >= 1 && maxTimes <= 10000,
-      s"kaplanMeier needs 1 <= maxTimes <= 10000, got $maxTimes")
-    val g = groupCols.map(col)
-    val grouped = counts.groupBy(g: _*)
+      s"$name needs 1 <= maxTimes <= 10000, got $maxTimes")
+    counts.groupBy(g: _*)
       .agg(sort_array(collect_list(struct(col("t"), col("d"), col("c"))))
         .as("__s"),
         sum(col("d") + col("c")).as("__n"))
       .filter(assert_true(size(col("__s")) <= maxTimes,
-        lit(s"kaplanMeier: a group exceeds maxTimes=$maxTimes distinct " +
+        lit(s"$name: a group exceeds maxTimes=$maxTimes distinct " +
           "times — bin durations coarser first")).isNull)
+  }
+
+  /** Finalize a (possibly merged) [[survivalCounts]] table into the
+    * [[kaplanMeier]] schema — the streaming-readout face. */
+  def kaplanMeierFromCounts(counts: DataFrame, groupCols: Seq[String],
+      maxTimes: Int = 1000): DataFrame = {
+    val g = groupCols.map(col)
+    val grouped = survivalGrid(counts, g, "kaplanMeier", maxTimes)
     val s = col("__s")
     val rows = transform(sequence(lit(1), size(s)), i => {
       // running (consumed, product) over times 1..i — the accumulator
@@ -2683,16 +2692,8 @@ object Stats {
     * readouts with no extra state. */
   def nelsonAalenFromCounts(counts: DataFrame, groupCols: Seq[String],
       maxTimes: Int = 1000): DataFrame = {
-    require(maxTimes >= 1 && maxTimes <= 10000,
-      s"nelsonAalen needs 1 <= maxTimes <= 10000, got $maxTimes")
     val g = groupCols.map(col)
-    val grouped = counts.groupBy(g: _*)
-      .agg(sort_array(collect_list(struct(col("t"), col("d"), col("c"))))
-        .as("__s"),
-        sum(col("d") + col("c")).as("__n"))
-      .filter(assert_true(size(col("__s")) <= maxTimes,
-        lit(s"nelsonAalen: a group exceeds maxTimes=$maxTimes distinct " +
-          "times — bin durations coarser first")).isNull)
+    val grouped = survivalGrid(counts, g, "nelsonAalen", maxTimes)
     val s = col("__s")
     val rows = transform(sequence(lit(1), size(s)), i => {
       // running (consumed, hazard, variance) over times 1..i — the
@@ -2750,16 +2751,8 @@ object Stats {
   def rmstFromCounts(counts: DataFrame, groupCols: Seq[String],
       tau: Double, maxTimes: Int = 1000): DataFrame = {
     require(tau > 0.0, s"tau must be positive, got $tau")
-    require(maxTimes >= 1 && maxTimes <= 10000,
-      s"rmst needs 1 <= maxTimes <= 10000, got $maxTimes")
     val g = groupCols.map(col)
-    val grouped = counts.groupBy(g: _*)
-      .agg(sort_array(collect_list(struct(col("t"), col("d"), col("c"))))
-        .as("__s"),
-        sum(col("d") + col("c")).as("__n"))
-      .filter(assert_true(size(col("__s")) <= maxTimes,
-        lit(s"rmst: a group exceeds maxTimes=$maxTimes distinct " +
-          "times — bin durations coarser first")).isNull)
+    val grouped = survivalGrid(counts, g, "rmst", maxTimes)
     val s = col("__s")
     val fin = aggregate(s,
       struct(lit(0L).as("u"), lit(1.0).as("p"), lit(0.0).as("pt"),
@@ -2795,16 +2788,8 @@ object Stats {
   def rmstWithVarFromCounts(counts: DataFrame, groupCols: Seq[String],
       tau: Double, maxTimes: Int = 1000): DataFrame = {
     require(tau > 0.0, s"tau must be positive, got $tau")
-    require(maxTimes >= 1 && maxTimes <= 10000,
-      s"rmstWithVar needs 1 <= maxTimes <= 10000, got $maxTimes")
     val g = groupCols.map(col)
-    val grouped = counts.groupBy(g: _*)
-      .agg(sort_array(collect_list(struct(col("t"), col("d"), col("c"))))
-        .as("__s"),
-        sum(col("d") + col("c")).as("__n"))
-      .filter(assert_true(size(col("__s")) <= maxTimes,
-        lit(s"rmstWithVar: a group exceeds maxTimes=$maxTimes distinct " +
-          "times — bin durations coarser first")).isNull)
+    val grouped = survivalGrid(counts, g, "rmstWithVar", maxTimes)
     val s = col("__s")
     def walk(acc: Column, x: Column): (Column, Column, Column, Column) = {
       val n = col("__n") - acc.getField("u")
@@ -2913,16 +2898,8 @@ object Stats {
     * KM/NA stored partial. */
   def kaplanMeierGreenwoodFromCounts(counts: DataFrame,
       groupCols: Seq[String], maxTimes: Int = 1000): DataFrame = {
-    require(maxTimes >= 1 && maxTimes <= 10000,
-      s"kaplanMeierGreenwood needs 1 <= maxTimes <= 10000, got $maxTimes")
     val g = groupCols.map(col)
-    val grouped = counts.groupBy(g: _*)
-      .agg(sort_array(collect_list(struct(col("t"), col("d"), col("c"))))
-        .as("__s"),
-        sum(col("d") + col("c")).as("__n"))
-      .filter(assert_true(size(col("__s")) <= maxTimes,
-        lit(s"kaplanMeierGreenwood: a group exceeds maxTimes=$maxTimes " +
-          "distinct times — bin durations coarser first")).isNull)
+    val grouped = survivalGrid(counts, g, "kaplanMeierGreenwood", maxTimes)
     val s = col("__s")
     val rows = transform(sequence(lit(1), size(s)), i => {
       val fin = aggregate(slice(s, lit(1), i),
@@ -3109,8 +3086,22 @@ object Stats {
     * its stored partial with [[logRankFromCounts]]. */
   def gehanLogRankFromCounts(counts: DataFrame, groupCols: Seq[String],
       maxTimes: Int = 1000): DataFrame = {
+    weightedLogRankFromCounts(counts, groupCols, maxTimes, "gehanLogRank",
+      nD => nD) // the Gehan weight: at-risk total at this time
+  }
+
+  /** The log-rank family's shared gather and O−E/V fold over a
+    * [[cohortSurvivalCounts]] table: each time's O−E contribution is
+    * weighted by wᵢ = `weight`(nᵢ) (nᵢ the at-risk total, as a double)
+    * and its variance contribution by wᵢ², around the inner expressions
+    * exactly as [[logRank]] forms them. `name` is the readout named in
+    * the guards' messages. Output per group: (n1, n2, o1, oe, v, chi2,
+    * z) with `oe` the weighted Σ w(O−E); chi2/z null when ΣV = 0. */
+  private def weightedLogRankFromCounts(counts: DataFrame,
+      groupCols: Seq[String], maxTimes: Int, name: String,
+      weight: Column => Column): DataFrame = {
     require(maxTimes >= 1 && maxTimes <= 10000,
-      s"gehanLogRank needs 1 <= maxTimes <= 10000, got $maxTimes")
+      s"$name needs 1 <= maxTimes <= 10000, got $maxTimes")
     val g = groupCols.map(col)
     val grouped = counts.groupBy(g: _*)
       .agg(sort_array(collect_list(struct(col("t"), col("d1"), col("x1"),
@@ -3119,7 +3110,7 @@ object Stats {
         sum(col("d2") + col("x2")).as("__n2"),
         sum(col("d1")).as("o1"))
       .filter(assert_true(size(col("__s")) <= maxTimes,
-        lit(s"gehanLogRank: a group exceeds maxTimes=$maxTimes distinct " +
+        lit(s"$name: a group exceeds maxTimes=$maxTimes distinct " +
           "times — bin durations coarser first")).isNull)
     val fin = aggregate(col("__s"),
       struct(lit(0L).as("u1"), lit(0L).as("u2"),
@@ -3131,7 +3122,7 @@ object Stats {
         val d = x.getField("d1") + x.getField("d2")
         val nD = n.cast("double")
         val dD = d.cast("double")
-        val wD = nD // the Gehan weight: at-risk total at this time
+        val wD = weight(nD)
         val contribOe = wD * (x.getField("d1").cast("double") -
           dD * n1.cast("double") / nD)
         val contribV = wD * wD * (dD * (n1.cast("double") / nD) *
@@ -3185,57 +3176,8 @@ object Stats {
     * log-rank/Gehan stored partial. */
   def taroneWareLogRankFromCounts(counts: DataFrame,
       groupCols: Seq[String], maxTimes: Int = 1000): DataFrame = {
-    require(maxTimes >= 1 && maxTimes <= 10000,
-      s"taroneWareLogRank needs 1 <= maxTimes <= 10000, got $maxTimes")
-    val g = groupCols.map(col)
-    val grouped = counts.groupBy(g: _*)
-      .agg(sort_array(collect_list(struct(col("t"), col("d1"), col("x1"),
-        col("d2"), col("x2")))).as("__s"),
-        sum(col("d1") + col("x1")).as("__n1"),
-        sum(col("d2") + col("x2")).as("__n2"),
-        sum(col("d1")).as("o1"))
-      .filter(assert_true(size(col("__s")) <= maxTimes,
-        lit(s"taroneWareLogRank: a group exceeds maxTimes=$maxTimes " +
-          "distinct times — bin durations coarser first")).isNull)
-    val fin = aggregate(col("__s"),
-      struct(lit(0L).as("u1"), lit(0L).as("u2"),
-        lit(0.0).as("oe"), lit(0.0).as("v")),
-      (acc, x) => {
-        val n1 = col("__n1") - acc.getField("u1")
-        val n2 = col("__n2") - acc.getField("u2")
-        val n = n1 + n2
-        val d = x.getField("d1") + x.getField("d2")
-        val nD = n.cast("double")
-        val dD = d.cast("double")
-        val wD = sqrt(nD) // the Tarone–Ware weight
-        val contribOe = wD * (x.getField("d1").cast("double") -
-          dD * n1.cast("double") / nD)
-        val contribV = wD * wD * (dD * (n1.cast("double") / nD) *
-          (n2.cast("double") / nD) *
-          ((n - d).cast("double") / (n - 1L).cast("double")))
-        val informative = n > 1L && d > 0L
-        struct(
-          (acc.getField("u1") + x.getField("d1") + x.getField("x1"))
-            .as("u1"),
-          (acc.getField("u2") + x.getField("d2") + x.getField("x2"))
-            .as("u2"),
-          (acc.getField("oe") +
-            when(informative, contribOe).otherwise(lit(0.0))).as("oe"),
-          (acc.getField("v") +
-            when(informative, contribV).otherwise(lit(0.0))).as("v"))
-      })
-    grouped
-      .withColumn("__f", fin)
-      .select(g ++ Seq(col("__n1").as("n1"), col("__n2").as("n2"),
-        col("o1"),
-        col("__f").getField("oe").as("oe"),
-        col("__f").getField("v").as("v"),
-        when(col("__f").getField("v") > 0.0,
-          col("__f").getField("oe") * col("__f").getField("oe") /
-            col("__f").getField("v")).as("chi2"),
-        when(col("__f").getField("v") > 0.0,
-          col("__f").getField("oe") /
-            sqrt(col("__f").getField("v"))).as("z")): _*)
+    weightedLogRankFromCounts(counts, groupCols, maxTimes,
+      "taroneWareLogRank", sqrt) // the Tarone–Ware weight
   }
 
   /** Two-proportion uplift test per group — the conversion-rate A/B
@@ -4231,56 +4173,12 @@ object Stats {
     * the [[logRank]] schema — the streaming-readout face. */
   def logRankFromCounts(counts: DataFrame, groupCols: Seq[String],
       maxTimes: Int = 1000): DataFrame = {
-    require(maxTimes >= 1 && maxTimes <= 10000,
-      s"logRank needs 1 <= maxTimes <= 10000, got $maxTimes")
-    val g = groupCols.map(col)
-    val grouped = counts.groupBy(g: _*)
-      .agg(sort_array(collect_list(struct(col("t"), col("d1"), col("x1"),
-        col("d2"), col("x2")))).as("__s"),
-        sum(col("d1") + col("x1")).as("__n1"),
-        sum(col("d2") + col("x2")).as("__n2"),
-        sum(col("d1")).as("o1"))
-      .filter(assert_true(size(col("__s")) <= maxTimes,
-        lit(s"logRank: a group exceeds maxTimes=$maxTimes distinct " +
-          "times — bin durations coarser first")).isNull)
-    val fin = aggregate(col("__s"),
-      struct(lit(0L).as("u1"), lit(0L).as("u2"),
-        lit(0.0).as("oe"), lit(0.0).as("v")),
-      (acc, x) => {
-        val n1 = col("__n1") - acc.getField("u1")
-        val n2 = col("__n2") - acc.getField("u2")
-        val n = n1 + n2
-        val d = x.getField("d1") + x.getField("d2")
-        val nD = n.cast("double")
-        val dD = d.cast("double")
-        val contribOe = x.getField("d1").cast("double") -
-          dD * n1.cast("double") / nD
-        val contribV = dD * (n1.cast("double") / nD) *
-          (n2.cast("double") / nD) *
-          ((n - d).cast("double") / (n - 1L).cast("double"))
-        val informative = n > 1L && d > 0L
-        struct(
-          (acc.getField("u1") + x.getField("d1") + x.getField("x1"))
-            .as("u1"),
-          (acc.getField("u2") + x.getField("d2") + x.getField("x2"))
-            .as("u2"),
-          (acc.getField("oe") +
-            when(informative, contribOe).otherwise(lit(0.0))).as("oe"),
-          (acc.getField("v") +
-            when(informative, contribV).otherwise(lit(0.0))).as("v"))
-      })
-    grouped
-      .withColumn("__f", fin)
-      .select(g ++ Seq(col("__n1").as("n1"), col("__n2").as("n2"),
-        col("o1"),
-        (col("o1").cast("double") - col("__f").getField("oe")).as("e1"),
-        col("__f").getField("v").as("v"),
-        when(col("__f").getField("v") > 0.0,
-          col("__f").getField("oe") * col("__f").getField("oe") /
-            col("__f").getField("v")).as("chi2"),
-        when(col("__f").getField("v") > 0.0,
-          col("__f").getField("oe") /
-            sqrt(col("__f").getField("v"))).as("z")): _*)
+    // weight 1.0 is exact (1.0·x == x), so the fold is the unweighted
+    // test's; its readout reports E1 = O1 − Σ(O−E) in oe's place
+    weightedLogRankFromCounts(counts, groupCols, maxTimes, "logRank",
+      _ => lit(1.0))
+      .withColumn("oe", col("o1").cast("double") - col("oe"))
+      .withColumnRenamed("oe", "e1")
   }
 
   /** Wald's sequential probability ratio test per group (Wald 1945) —

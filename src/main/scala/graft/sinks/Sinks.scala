@@ -68,8 +68,8 @@ object Sinks {
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .option("sep", "\t").option("header", "false").csv(path)
 
-  /** S7 read side (`/root/reference/Time_Series.py:587–611`): tiny table →
-    * driver map, the only sanctioned `collect` in the engine. */
+  /** S7 read side (`/root/reference/Time_Series.py:587–611`): a tiny
+    * table read into a driver map. */
   def readWhereReference(spark: SparkSession, path: String): Map[String, String] =
     spark.read.option("sep", "\t").option("header", "false")
       .csv(path).select("_c0", "_c1")

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.TimeSeries
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 /** Streaming ingestion mode (SURVEY.md §2.9): the batch weekly aggregates
   * re-expressed over `readStream` sources with event-time semantics.
@@ -94,6 +95,37 @@ object StreamingTimeSeries {
       }
       .start()
 
+  /** The one partial-table sink behind every mergeable-partials face
+    * below: each micro-batch maps through every `(dir, partial)` pair,
+    * and each partial table is stamped with the batch id and APPENDED
+    * to its dir as parquet. foreachBatch is AT-LEAST-ONCE: a crash
+    * between an append and the offset commit replays the batch on
+    * restart, appending identical rows (the partials are deterministic)
+    * under the SAME batch_id — [[partials]] collapses them. */
+  private def appendPartials(events: DataFrame, checkpointDir: String,
+      tables: (String, DataFrame => DataFrame)*): StreamingQuery =
+    events
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val b = batch.toDF()
+        tables.foreach { case (dir, partial) =>
+          partial(b).withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(dir)
+        }
+      }
+      .start()
+
+  /** The one replay-guarded reader of an [[appendPartials]] table: one
+    * row per (keys…, batch_id), so a replayed batch counts once while
+    * distinct batches that happen to produce equal partials survive
+    * (their batch_ids differ); then batch_id is dropped. `keys` are the
+    * table's key columns — empty when a batch stores a single row. */
+  private def partials(spark: SparkSession, dir: String,
+      keys: String*): DataFrame =
+    spark.read.parquet(dir).dropDuplicates(keys :+ "batch_id")
+      .drop("batch_id")
+
   /** Streaming distinct-count maintenance via mergeable HLL sketches —
     * the ingestion-time face of [[graft.operators.Sketches]]: each
     * micro-batch reduces to one sketch per group and APPENDS it to
@@ -106,16 +138,9 @@ object StreamingTimeSeries {
     * streaming spec proves it across micro-batches). */
   def startDistinctSketchQuery(events: DataFrame, groupCol: String,
       valueCol: String, targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches
-          .distinctSketch(batch.toDF(), Seq(col(groupCol)), col(valueCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      graft.operators.Sketches
+        .distinctSketch(b, Seq(col(groupCol)), col(valueCol))))
 
   /** Merge all per-batch sketches stored by [[startDistinctSketchQuery]]
     * into one distinct-count estimate per group. */
@@ -138,28 +163,17 @@ object StreamingTimeSeries {
   def startMomentPartialsQuery(events: DataFrame, groupCol: String,
       xCol: String, yCol: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .momentPartials(batch.toDF(), Seq(col(groupCol)), col(xCol), col(yCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      graft.operators.Stats
+        .momentPartials(b, Seq(col(groupCol)), col(xCol), col(yCol))))
 
   /** Finalized whole-stream statistics from the partial rows stored by
     * [[startMomentPartialsQuery]].
     *
-    * foreachBatch is AT-LEAST-ONCE: a crash between the parquet append
-    * and the offset commit replays the batch on restart, appending a
-    * second (identical — the partials are deterministic exact integers)
-    * row per group under the SAME batch_id. Unlike the HLL sink (union
-    * is idempotent) a SUM would double-count, so the reader keeps one
-    * row per (group, batch_id) before merging — replays collapse, while
-    * distinct batches that happen to produce equal partials survive
-    * (their batch_ids differ). */
+    * Unlike the HLL sink (union is idempotent) a SUM would double-count
+    * a replayed batch, so the reader keeps one row per (group, batch_id)
+    * before merging — replays collapse, while distinct batches that
+    * happen to produce equal partials survive (their batch_ids differ). */
   def mergedMoments(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.momentsFromPartials(
@@ -178,9 +192,7 @@ object StreamingTimeSeries {
   private def mergedPartials(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.mergeMomentPartials(
-      Seq(spark.read.parquet(targetDir)
-        .dropDuplicates(groupCol, "batch_id").drop("batch_id")),
-      Seq(groupCol))
+      Seq(partials(spark, targetDir, groupCol)), Seq(groupCol))
 
   /** Streaming covariance maintenance — the ingestion face of
     * [[graft.operators.Pca.covariance]]: each micro-batch reduces to ONE
@@ -195,15 +207,8 @@ object StreamingTimeSeries {
     * integer moment sinks above). */
   def startCovarianceQuery(events: DataFrame, vecCol: String, dim: Int,
       targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Pca.covariancePartials(batch.toDF(), col(vecCol), dim)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      graft.operators.Pca.covariancePartials(b, col(vecCol), dim)))
 
   /** Whole-stream covariance model from the partials stored by
     * [[startCovarianceQuery]] — replay-guarded on batch_id, then the
@@ -211,8 +216,7 @@ object StreamingTimeSeries {
   def mergedCovariance(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, dim: Int): graft.operators.Pca.CovarianceModel =
     graft.operators.Pca.covarianceFromPartials(
-      spark.read.parquet(targetDir)
-        .dropDuplicates("batch_id").drop("batch_id"), dim)
+      partials(spark, targetDir), dim)
 
   /** Streaming Count-Min maintenance — the ingestion face of
     * [[graft.operators.Sketches.countMinSketch]]: each micro-batch
@@ -223,17 +227,9 @@ object StreamingTimeSeries {
     * before summing — the moment-sink posture, not the KMV one. */
   def startCmsQuery(events: DataFrame, keyCol: String, targetDir: String,
       checkpointDir: String, depth: Int = 4, width: Int = 1024) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches
-          .countMinSketch(batch.toDF(), col(keyCol), depth, width)
-          .counters
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      graft.operators.Sketches
+        .countMinSketch(b, col(keyCol), depth, width).counters))
 
   /** Whole-stream CMS from the per-batch counters stored by
     * [[startCmsQuery]] — replay-guarded counter-wise addition, returned
@@ -244,8 +240,7 @@ object StreamingTimeSeries {
       targetDir: String, depth: Int = 4,
       width: Int = 1024): graft.operators.Sketches.CmsSketch =
     graft.operators.Sketches.CmsSketch(
-      spark.read.parquet(targetDir)
-        .dropDuplicates("row", "bucket", "batch_id").drop("batch_id")
+      partials(spark, targetDir, "row", "bucket")
         .groupBy("row", "bucket").agg(sum(col("cnt")).as("cnt")),
       depth, width)
 
@@ -260,17 +255,9 @@ object StreamingTimeSeries {
   def startWelchPartialsQuery(events: DataFrame, groupCol: String,
       xCol: String, cohortExpr: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .welchPartials(batch.toDF(), Seq(col(groupCol)), col(xCol),
-            expr(cohortExpr))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      graft.operators.Stats.welchPartials(b, Seq(col(groupCol)),
+        col(xCol), expr(cohortExpr))))
 
   /** Whole-stream Welch's t from the partials stored by
     * [[startWelchPartialsQuery]] — replay-guarded merge, then the SAME
@@ -281,9 +268,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.welchFromPartials(
       graft.operators.Stats.mergeWelchPartials(
-        Seq(spark.read.parquet(targetDir)
-          .dropDuplicates(groupCol, "batch_id").drop("batch_id")),
-        Seq(groupCol)))
+        Seq(partials(spark, targetDir, groupCol)), Seq(groupCol)))
 
   /** Streaming quantile maintenance — the ingestion face of
     * [[graft.operators.Sketches.quantileSketch]]: each micro-batch
@@ -297,18 +282,9 @@ object StreamingTimeSeries {
   def startQuantileSketchQuery(events: DataFrame, groupCol: String,
       valueCol: String, targetDir: String, checkpointDir: String,
       scale: Int = 2) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches
-          .quantileSketch(batch.toDF(), Seq(col(groupCol)), col(valueCol),
-            scale)
-          .buckets
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      graft.operators.Sketches.quantileSketch(b, Seq(col(groupCol)),
+        col(valueCol), scale).buckets))
 
   /** Whole-stream quantile estimates from the bucket partials stored by
     * [[startQuantileSketchQuery]] — per-bucket addition across batches,
@@ -317,8 +293,7 @@ object StreamingTimeSeries {
   def mergedQuantiles(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String, qs: Seq[Double],
       scale: Int = 2): DataFrame = {
-    val merged = spark.read.parquet(targetDir)
-      .dropDuplicates(groupCol, "bucket", "batch_id").drop("batch_id")
+    val merged = partials(spark, targetDir, groupCol, "bucket")
       .groupBy(col(groupCol), col("bucket"), col("lb"))
       .agg(sum(col("cnt")).as("cnt"))
     graft.operators.Sketches.QuantileSketch(merged, scale, Seq(groupCol))
@@ -343,26 +318,15 @@ object StreamingTimeSeries {
     * (StreamingSpec pins it, replay included). */
   def startSeasonalPartialsQuery(events: DataFrame, tsCol: String,
       keyCol: String, targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        TimeSeries.weeklyFrequency(batch.toDF(), to_date(col(tsCol)),
-            col(keyCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      TimeSeries.weeklyFrequency(b, to_date(col(tsCol)), col(keyCol))))
 
   /** The merged dense weekly table behind [[mergedSeasonal]] /
     * [[mergedAnomalies]] — replay-guarded exact counts, densified with
     * the batch [[TimeSeries.denseWeekly]]. */
   def mergedWeeklyTable(spark: org.apache.spark.sql.SparkSession,
       targetDir: String): DataFrame =
-    TimeSeries.denseWeekly(
-        spark.read.parquet(targetDir)
-          .dropDuplicates("key", "week_start", "batch_id").drop("batch_id")
-          .groupBy("key", "week_start").agg(sum(col("freq")).as("freq")))
+    TimeSeries.denseWeekly(mergedSparseWeekly(spark, targetDir))
       .select("key", "week_start", "freq")
 
   /** Whole-stream seasonal decomposition from the weekly partials stored
@@ -423,8 +387,7 @@ object StreamingTimeSeries {
     * batch faces). */
   private def mergedSparseWeekly(spark: org.apache.spark.sql.SparkSession,
       targetDir: String): DataFrame =
-    spark.read.parquet(targetDir)
-      .dropDuplicates("key", "week_start", "batch_id").drop("batch_id")
+    partials(spark, targetDir, "key", "week_start")
       .groupBy("key", "week_start").agg(sum(col("freq")).as("freq"))
 
   /** Whole-stream level-shift changepoints from the SAME stored weekly
@@ -458,20 +421,14 @@ object StreamingTimeSeries {
     * re-top-ks with `distinctTies = true`: ties are unique row ids, so
     * identical (ord, tie) pairs can only come from an at-least-once
     * replay of the same batch — the distinct-merge IS the replay guard,
-    * collapsing them into one slot with no batch-id bookkeeping. */
+    * collapsing them into one slot; the reader ignores the batch id. */
   def startTopKQuery(events: DataFrame, groupCol: String, ordCol: String,
       tieCol: String, k: Int, targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Ranks
-          .topKPerGroup(batch.toDF(), Seq(groupCol), col(ordCol),
-            col(tieCol), k, ordName = "ord", tieName = "tie")
-          .select(col(groupCol), col("ord"), col("tie"))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      graft.operators.Ranks
+        .topKPerGroup(b, Seq(groupCol), col(ordCol), col(tieCol), k,
+          ordName = "ord", tieName = "tie")
+        .select(col(groupCol), col("ord"), col("tie"))))
 
   /** Whole-stream top-k from the per-batch candidates stored by
     * [[startTopKQuery]]. Equals the batch [[graft.operators.Ranks
@@ -484,8 +441,9 @@ object StreamingTimeSeries {
       rankCol: String = "rank", ordName: String = "ord",
       tieName: String = "tie"): DataFrame =
     graft.operators.Ranks.topKPerGroup(
-      spark.read.parquet(targetDir), Seq(groupCol), col("ord"), col("tie"),
-      k, rankCol, ordName, tieName, distinctTies = true)
+      spark.read.parquet(targetDir).drop("batch_id"), Seq(groupCol),
+      col("ord"), col("tie"), k, rankCol, ordName, tieName,
+      distinctTies = true)
 
   /** Streaming distinct-count maintenance via KMV — like
     * [[startDistinctSketchQuery]] but with the ENGINE-PORTABLE sketch:
@@ -496,23 +454,17 @@ object StreamingTimeSeries {
   def startKmvSketchQuery(events: DataFrame, groupCol: String,
       valueCol: String, targetDir: String, checkpointDir: String,
       k: Int = 64) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Sketches
-          .kmvSketch(batch.toDF(), Seq(groupCol), col(valueCol), k)
-          .mins
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events, checkpointDir, (targetDir, b =>
+      graft.operators.Sketches.kmvSketch(b, Seq(groupCol), col(valueCol), k)
+        .mins))
 
   /** Whole-stream distinct estimates from the min tables stored by
     * [[startKmvSketchQuery]] — equals the batch sketch of the union. */
   def mergedKmvDistinct(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, k: Int = 64): DataFrame =
     graft.operators.Sketches
-      .kmvFromMins(spark.read.parquet(targetDir), k).estimate
+      .kmvFromMins(spark.read.parquet(targetDir).drop("batch_id"), k)
+      .estimate
 
   /** Streaming drift-metric maintenance — the ingestion face of the
     * WHOLE drift toolkit ([[graft.operators.Stats]]: PSI, JS, KS,
@@ -530,35 +482,22 @@ object StreamingTimeSeries {
   def startDriftCountsQuery(events: DataFrame, groupCol: String,
       xCol: String, cohortExpr: String, edges: Seq[Double],
       targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF()
-        graft.operators.Stats
-          .binCounts(b, Seq(col(groupCol)), col(xCol), expr(cohortExpr),
-            edges)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/bins")
-        graft.operators.Stats
-          .valueCounts(b, Seq(col(groupCol)), col(xCol), expr(cohortExpr))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/values")
-      }
-      .start()
+    appendPartials(events, checkpointDir,
+      (s"$targetDir/bins", b => graft.operators.Stats.binCounts(b,
+        Seq(col(groupCol)), col(xCol), expr(cohortExpr), edges)),
+      (s"$targetDir/values", b => graft.operators.Stats.valueCounts(b,
+        Seq(col(groupCol)), col(xCol), expr(cohortExpr))))
 
   private def mergedBins(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.mergeBinCounts(
-      Seq(spark.read.parquet(s"$targetDir/bins")
-        .dropDuplicates(groupCol, "__bin", "batch_id").drop("batch_id")),
+      Seq(partials(spark, s"$targetDir/bins", groupCol, "__bin")),
       Seq(groupCol))
 
   private def mergedValues(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.mergeValueCounts(
-      Seq(spark.read.parquet(s"$targetDir/values")
-        .dropDuplicates(groupCol, "__x", "batch_id").drop("batch_id")),
+      Seq(partials(spark, s"$targetDir/values", groupCol, "__x")),
       Seq(groupCol))
 
   /** Whole-stream PSI from the stored bin partials — bit-identical to
@@ -596,28 +535,23 @@ object StreamingTimeSeries {
   def startLevelCountsQuery(events: DataFrame, groupCol: String,
       levelCol: String, xCol: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .levelValueCounts(batch.toDF(), Seq(col(groupCol)),
-            col(levelCol), col(xCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/level_values")
-      }
-      .start()
+    appendPartials(events, checkpointDir, (s"$targetDir/level_values", b =>
+      graft.operators.Stats.levelValueCounts(b, Seq(col(groupCol)),
+        col(levelCol), col(xCol))))
+
+  private def mergedLevelValues(spark: org.apache.spark.sql.SparkSession,
+      targetDir: String, groupCol: String): DataFrame =
+    graft.operators.Stats.mergeLevelValueCounts(
+      Seq(partials(spark, s"$targetDir/level_values", groupCol, "__l",
+        "__x")),
+      Seq(groupCol))
 
   /** Whole-stream Kruskal–Wallis from the stored level-count partials
     * — bit-identical to the batch test over all data. */
   def mergedKruskalWallis(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.kruskalWallisFromLevelCounts(
-      graft.operators.Stats.mergeLevelValueCounts(
-        Seq(spark.read.parquet(s"$targetDir/level_values")
-          .dropDuplicates(groupCol, "__l", "__x", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)))
+      mergedLevelValues(spark, targetDir, groupCol))
 
   /** Whole-stream Jonckheere–Terpstra ordered-trend test from the SAME
     * stored level-count partials as [[mergedKruskalWallis]] — a third
@@ -625,11 +559,7 @@ object StreamingTimeSeries {
   def mergedJonckheere(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.jonckheereFromLevelCounts(
-      graft.operators.Stats.mergeLevelValueCounts(
-        Seq(spark.read.parquet(s"$targetDir/level_values")
-          .dropDuplicates(groupCol, "__l", "__x", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)))
+      mergedLevelValues(spark, targetDir, groupCol))
 
   /** Streaming survival maintenance — the ingestion face of
     * [[graft.operators.Stats.kaplanMeier]]: each micro-batch of CLOSED
@@ -643,29 +573,24 @@ object StreamingTimeSeries {
   def startSurvivalCountsQuery(subjects: DataFrame, groupCol: String,
       durationCol: String, eventCol: String, targetDir: String,
       checkpointDir: String) =
-    subjects
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .survivalCounts(batch.toDF(), Seq(groupCol),
-            col(durationCol), col(eventCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/survival_counts")
-      }
-      .start()
+    appendPartials(subjects, checkpointDir,
+      (s"$targetDir/survival_counts", b => graft.operators.Stats
+        .survivalCounts(b, Seq(groupCol), col(durationCol), col(eventCol))))
+
+  /** The replay-guarded merged survival_counts table behind the KM, NA
+    * and conditional-survival readouts. */
+  private def mergedSurvival(spark: org.apache.spark.sql.SparkSession,
+      targetDir: String, groupCol: String): DataFrame =
+    graft.operators.Stats.mergeSurvivalCounts(
+      Seq(partials(spark, s"$targetDir/survival_counts", groupCol, "t")),
+      Seq(groupCol))
 
   /** Whole-stream Kaplan–Meier from the stored count deltas —
     * bit-identical to the batch estimator over all closed subjects. */
   def mergedKaplanMeier(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.kaplanMeierFromCounts(
-      graft.operators.Stats.mergeSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/survival_counts")
-          .dropDuplicates(groupCol, "t", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)),
-      Seq(groupCol))
+      mergedSurvival(spark, targetDir, groupCol), Seq(groupCol))
 
   /** Streaming log-rank maintenance — the two-cohort companion of
     * [[startSurvivalCountsQuery]]: per-batch exact per-(group, t)
@@ -675,28 +600,26 @@ object StreamingTimeSeries {
   def startCohortSurvivalCountsQuery(subjects: DataFrame,
       groupCol: String, durationCol: String, eventCol: String,
       cohortCol: String, targetDir: String, checkpointDir: String) =
-    subjects
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .cohortSurvivalCounts(batch.toDF(), Seq(groupCol),
-            col(durationCol), col(eventCol), col(cohortCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/cohort_surv_counts")
-      }
-      .start()
+    appendPartials(subjects, checkpointDir,
+      (s"$targetDir/cohort_surv_counts", b => graft.operators.Stats
+        .cohortSurvivalCounts(b, Seq(groupCol), col(durationCol),
+          col(eventCol), col(cohortCol))))
+
+  /** The replay-guarded merged cohort_surv_counts table behind the
+    * log-rank family; `groupCol` is the stratum for the stratified
+    * readout. */
+  private def mergedCohortSurvival(spark: org.apache.spark.sql.SparkSession,
+      targetDir: String, groupCol: String): DataFrame =
+    graft.operators.Stats.mergeCohortSurvivalCounts(
+      Seq(partials(spark, s"$targetDir/cohort_surv_counts", groupCol, "t")),
+      Seq(groupCol))
 
   /** Whole-stream log-rank from the stored cohort-split deltas —
     * bit-identical to the batch test over all closed subjects. */
   def mergedLogRank(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.logRankFromCounts(
-      graft.operators.Stats.mergeCohortSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/cohort_surv_counts")
-          .dropDuplicates(groupCol, "t", "batch_id").drop("batch_id")),
-        Seq(groupCol)),
-      Seq(groupCol))
+      mergedCohortSurvival(spark, targetDir, groupCol), Seq(groupCol))
 
   /** Whole-stream Nelson–Aalen cumulative hazard — a SECOND readout
     * over the SAME stored deltas [[startSurvivalCountsQuery]]
@@ -705,12 +628,7 @@ object StreamingTimeSeries {
   def mergedNelsonAalen(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.nelsonAalenFromCounts(
-      graft.operators.Stats.mergeSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/survival_counts")
-          .dropDuplicates(groupCol, "t", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)),
-      Seq(groupCol))
+      mergedSurvival(spark, targetDir, groupCol), Seq(groupCol))
 
   /** Whole-stream Gehan–Breslow weighted log-rank — a SECOND readout
     * over the SAME stored cohort-split deltas
@@ -719,11 +637,7 @@ object StreamingTimeSeries {
   def mergedGehanLogRank(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.gehanLogRankFromCounts(
-      graft.operators.Stats.mergeCohortSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/cohort_surv_counts")
-          .dropDuplicates(groupCol, "t", "batch_id").drop("batch_id")),
-        Seq(groupCol)),
-      Seq(groupCol))
+      mergedCohortSurvival(spark, targetDir, groupCol), Seq(groupCol))
 
   /** Streaming attribution maintenance (set face) — the ingestion face
     * of [[graft.operators.Attribution.shapley]]: each micro-batch of
@@ -734,17 +648,9 @@ object StreamingTimeSeries {
   def startMaskCountsQuery(events: DataFrame, userCol: String,
       channelCol: String, convertedCol: String, channels: Seq[String],
       targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Attribution
-          .maskConversionCounts(batch.toDF(), col(userCol),
-            col(channelCol), col(convertedCol), channels)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/mask_counts")
-      }
-      .start()
+    appendPartials(events, checkpointDir, (s"$targetDir/mask_counts", b =>
+      graft.operators.Attribution.maskConversionCounts(b, col(userCol),
+        col(channelCol), col(convertedCol), channels)))
 
   /** Whole-stream Shapley attribution from the stored mask deltas —
     * bit-identical to the batch operator over all closed users. */
@@ -752,8 +658,7 @@ object StreamingTimeSeries {
       targetDir: String, channels: Seq[String]): DataFrame =
     graft.operators.Attribution.shapleyFromMaskCounts(
       graft.operators.Attribution.mergeMaskCounts(
-        Seq(spark.read.parquet(s"$targetDir/mask_counts")
-          .dropDuplicates("mask", "batch_id").drop("batch_id"))),
+        Seq(partials(spark, s"$targetDir/mask_counts", "mask"))),
       channels)
 
   /** Streaming position/time-decay attribution maintenance — the
@@ -768,18 +673,10 @@ object StreamingTimeSeries {
       convertedCol: String, channels: Seq[String],
       halfLifeDays: Double, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Attribution
-          .positionCreditCounts(batch.toDF(), col(userCol),
-            col(channelCol), col(tsCol), col(tieCol), col(convertedCol),
-            channels, halfLifeDays)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/position_credits")
-      }
-      .start()
+    appendPartials(events, checkpointDir,
+      (s"$targetDir/position_credits", b => graft.operators.Attribution
+        .positionCreditCounts(b, col(userCol), col(channelCol), col(tsCol),
+          col(tieCol), col(convertedCol), channels, halfLifeDays)))
 
   /** Whole-stream position/time-decay attribution from the stored
     * credit deltas — bit-identical to the batch operator. */
@@ -787,8 +684,7 @@ object StreamingTimeSeries {
       targetDir: String, channels: Seq[String]): DataFrame =
     graft.operators.Attribution.positionFromCredits(
       graft.operators.Attribution.mergePositionCredits(
-        Seq(spark.read.parquet(s"$targetDir/position_credits")
-          .dropDuplicates("channel", "batch_id").drop("batch_id"))),
+        Seq(partials(spark, s"$targetDir/position_credits", "channel"))),
       channels)
 
   /** Streaming competing-risks maintenance — the ingestion face of
@@ -801,17 +697,10 @@ object StreamingTimeSeries {
   def startCauseSurvivalCountsQuery(subjects: DataFrame,
       groupCol: String, durationCol: String, causeCol: String,
       nCauses: Int, targetDir: String, checkpointDir: String) =
-    subjects
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .causeSurvivalCounts(batch.toDF(), Seq(groupCol),
-            col(durationCol), col(causeCol), nCauses)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/cause_surv_counts")
-      }
-      .start()
+    appendPartials(subjects, checkpointDir,
+      (s"$targetDir/cause_surv_counts", b => graft.operators.Stats
+        .causeSurvivalCounts(b, Seq(groupCol), col(durationCol),
+          col(causeCol), nCauses)))
 
   /** Whole-stream STRATIFIED log-rank from the same stored
     * cohort-split deltas the plain log-rank maintains, read with the
@@ -821,10 +710,7 @@ object StreamingTimeSeries {
       targetDir: String, stratumCol: String,
       maxTimes: Int = 1000): DataFrame =
     graft.operators.Stats.stratifiedLogRankFromCounts(
-      graft.operators.Stats.mergeCohortSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/cohort_surv_counts")
-          .dropDuplicates(stratumCol, "t", "batch_id").drop("batch_id")),
-        Seq(stratumCol)),
+      mergedCohortSurvival(spark, targetDir, stratumCol),
       Nil, stratumCol, maxTimes)
 
   /** Whole-stream Aalen–Johansen cumulative incidence from the stored
@@ -833,8 +719,8 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String, nCauses: Int): DataFrame =
     graft.operators.Stats.aalenJohansenFromCounts(
       graft.operators.Stats.mergeCauseSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/cause_surv_counts")
-          .dropDuplicates(groupCol, "t", "batch_id").drop("batch_id")),
+        Seq(partials(spark, s"$targetDir/cause_surv_counts", groupCol,
+          "t")),
         Seq(groupCol), nCauses),
       Seq(groupCol), nCauses)
 
@@ -847,17 +733,9 @@ object StreamingTimeSeries {
   def startRatingCountsQuery(ratings: DataFrame, groupCol: String,
       itemCol: String, categoryCol: String, targetDir: String,
       checkpointDir: String) =
-    ratings
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .ratingCounts(batch.toDF(), Seq(groupCol), col(itemCol),
-            col(categoryCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/rating_counts")
-      }
-      .start()
+    appendPartials(ratings, checkpointDir, (s"$targetDir/rating_counts", b =>
+      graft.operators.Stats.ratingCounts(b, Seq(groupCol), col(itemCol),
+        col(categoryCol))))
 
   /** Whole-stream Fleiss' κ from the stored rating-count deltas —
     * bit-identical to batch. */
@@ -865,9 +743,8 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.fleissKappaFromCounts(
       graft.operators.Stats.mergeRatingCounts(
-        Seq(spark.read.parquet(s"$targetDir/rating_counts")
-          .dropDuplicates(groupCol, "item", "category", "batch_id")
-          .drop("batch_id")),
+        Seq(partials(spark, s"$targetDir/rating_counts", groupCol, "item",
+          "category")),
         Seq(groupCol)),
       Seq(groupCol))
 
@@ -881,27 +758,24 @@ object StreamingTimeSeries {
   def startArmCountsQuery(events: DataFrame, groupCol: String,
       treatedCol: String, outcomeCol: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .armCounts(batch.toDF(), Seq(col(groupCol)), col(treatedCol),
-            col(outcomeCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/arm_counts")
-      }
-      .start()
+    appendPartials(events, checkpointDir, (s"$targetDir/arm_counts", b =>
+      graft.operators.Stats.armCounts(b, Seq(col(groupCol)),
+        col(treatedCol), col(outcomeCol))))
+
+  /** The replay-guarded merged arm_counts table behind the uplift, CMH
+    * (`groupCol` is then the stratum) and mSPRT readouts. */
+  private def mergedArms(spark: org.apache.spark.sql.SparkSession,
+      targetDir: String, groupCol: String): DataFrame =
+    graft.operators.Stats.mergeArmCounts(
+      Seq(partials(spark, s"$targetDir/arm_counts", groupCol)),
+      Seq(groupCol))
 
   /** Whole-stream two-proportion uplift from the stored count deltas —
     * bit-identical to batch. */
   def mergedProportionUplift(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.proportionUpliftFromCounts(
-      graft.operators.Stats.mergeArmCounts(
-        Seq(spark.read.parquet(s"$targetDir/arm_counts")
-          .dropDuplicates(groupCol, "batch_id").drop("batch_id")),
-        Seq(groupCol)))
+      mergedArms(spark, targetDir, groupCol))
 
   /** Whole-stream CMH stratified test from the SAME stored deltas,
     * read with the group key as the STRATUM — no new state, no new
@@ -911,11 +785,7 @@ object StreamingTimeSeries {
       targetDir: String, stratumCol: String,
       maxStrata: Int = 1000): DataFrame =
     graft.operators.Stats.cmhFromCounts(
-      graft.operators.Stats.mergeArmCounts(
-        Seq(spark.read.parquet(s"$targetDir/arm_counts")
-          .dropDuplicates(stratumCol, "batch_id").drop("batch_id")),
-        Seq(stratumCol)),
-      Nil, stratumCol, maxStrata)
+      mergedArms(spark, targetDir, stratumCol), Nil, stratumCol, maxStrata)
 
   /** Whole-stream always-valid p-value from the SAME stored deltas —
     * the peeking-proof live dashboard readout. */
@@ -923,10 +793,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String, tauSq: Double = 1e-4,
       alpha: Double = 0.05): DataFrame =
     graft.operators.Stats.msprtFromCounts(
-      graft.operators.Stats.mergeArmCounts(
-        Seq(spark.read.parquet(s"$targetDir/arm_counts")
-          .dropDuplicates(groupCol, "batch_id").drop("batch_id")),
-        Seq(groupCol)), tauSq, alpha)
+      mergedArms(spark, targetDir, groupCol), tauSq, alpha)
 
   /** Streaming interim-analysis maintenance — the ingestion face of
     * [[graft.operators.Stats.groupSequentialTest]]: arm-count deltas
@@ -936,18 +803,10 @@ object StreamingTimeSeries {
   def startArmCountsByLookQuery(events: DataFrame, groupCol: String,
       lookCol: String, treatedCol: String, outcomeCol: String,
       targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .armCounts(batch.toDF(),
-            Seq(col(groupCol), col(lookCol).cast("int").as("look")),
-            col(treatedCol), col(outcomeCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/arm_counts_by_look")
-      }
-      .start()
+    appendPartials(events, checkpointDir,
+      (s"$targetDir/arm_counts_by_look", b => graft.operators.Stats
+        .armCounts(b, Seq(col(groupCol), col(lookCol).cast("int").as("look")),
+          col(treatedCol), col(outcomeCol))))
 
   /** Whole-stream group-sequential boundary readout from the stored
     * per-look deltas — bit-identical to the batch test. The interim
@@ -959,9 +818,8 @@ object StreamingTimeSeries {
       kind: String = "obf"): DataFrame =
     graft.operators.Stats.groupSequentialFromCounts(
       graft.operators.Stats.mergeArmCounts(
-        Seq(spark.read.parquet(s"$targetDir/arm_counts_by_look")
-          .dropDuplicates(groupCol, "look", "batch_id")
-          .drop("batch_id")),
+        Seq(partials(spark, s"$targetDir/arm_counts_by_look", groupCol,
+          "look")),
         Seq(groupCol, "look")),
       Seq(groupCol), looks, kind)
 
@@ -975,17 +833,10 @@ object StreamingTimeSeries {
   def startCalibrationCountsQuery(events: DataFrame, groupCol: String,
       durationCol: String, eventCol: String, predCol: String,
       edges: Seq[Double], targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Concordance
-          .calibrationCounts(batch.toDF(), Seq(groupCol),
-            col(durationCol), col(eventCol), col(predCol), edges)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/calibration_counts")
-      }
-      .start()
+    appendPartials(events, checkpointDir,
+      (s"$targetDir/calibration_counts", b => graft.operators.Concordance
+        .calibrationCounts(b, Seq(groupCol), col(durationCol),
+          col(eventCol), col(predCol), edges)))
 
   /** Whole-stream calibration table from the stored deltas —
     * bit-identical to the batch frozen-edges face over all data. */
@@ -993,9 +844,8 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String, horizon: Double): DataFrame =
     graft.operators.Concordance.survivalCalibrationFromCounts(
       graft.operators.Concordance.mergeCalibrationCounts(
-        Seq(spark.read.parquet(s"$targetDir/calibration_counts")
-          .dropDuplicates(groupCol, "bin", "t", "batch_id")
-          .drop("batch_id")),
+        Seq(partials(spark, s"$targetDir/calibration_counts", groupCol,
+          "bin", "t")),
         Seq(groupCol)),
       Seq(groupCol), horizon)
 
@@ -1006,12 +856,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String,
       pairs: Seq[(Double, Double)]): DataFrame =
     graft.operators.Concordance.conditionalSurvivalFromCounts(
-      graft.operators.Stats.mergeSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/survival_counts")
-          .dropDuplicates(groupCol, "t", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)),
-      Seq(groupCol), pairs)
+      mergedSurvival(spark, targetDir, groupCol), Seq(groupCol), pairs)
 
   /** Streaming ratio-metric experiment maintenance — the ingestion
     * face of [[graft.operators.Stats.ratioUplift]]: each micro-batch
@@ -1024,17 +869,9 @@ object StreamingTimeSeries {
       treatedCol: String, unitCol: String, numCol: String,
       denCol: String, quantScale: Double, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .ratioMoments(batch.toDF(), Seq(groupCol), col(treatedCol),
-            col(unitCol), col(numCol), col(denCol), quantScale)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/ratio_moments")
-      }
-      .start()
+    appendPartials(events, checkpointDir, (s"$targetDir/ratio_moments", b =>
+      graft.operators.Stats.ratioMoments(b, Seq(groupCol), col(treatedCol),
+        col(unitCol), col(numCol), col(denCol), quantScale)))
 
   /** Whole-stream delta-method ratio uplift from the stored moment
     * deltas — bit-identical to the batch operator over closed units. */
@@ -1042,8 +879,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.ratioFromMoments(
       graft.operators.Stats.mergeRatioMoments(
-        Seq(spark.read.parquet(s"$targetDir/ratio_moments")
-          .dropDuplicates(groupCol, "arm", "batch_id").drop("batch_id")),
+        Seq(partials(spark, s"$targetDir/ratio_moments", groupCol, "arm")),
         Seq(groupCol)),
       Seq(groupCol))
 
@@ -1057,17 +893,10 @@ object StreamingTimeSeries {
       channelCol: String, tsCol: String, tieCol: String,
       convertedCol: String, channels: Seq[String], targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Attribution
-          .transitionCounts(batch.toDF(), col(userCol), col(channelCol),
-            col(tsCol), col(tieCol), col(convertedCol), channels)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/transition_counts")
-      }
-      .start()
+    appendPartials(events, checkpointDir,
+      (s"$targetDir/transition_counts", b => graft.operators.Attribution
+        .transitionCounts(b, col(userCol), col(channelCol), col(tsCol),
+          col(tieCol), col(convertedCol), channels)))
 
   /** Whole-stream Markov removal effects from the stored transition
     * deltas — bit-identical to the batch operator. */
@@ -1076,8 +905,7 @@ object StreamingTimeSeries {
       iters: Int = 60): DataFrame =
     graft.operators.Attribution.markovFromCounts(
       graft.operators.Attribution.mergeTransitionCounts(
-        Seq(spark.read.parquet(s"$targetDir/transition_counts")
-          .dropDuplicates("from", "to", "batch_id").drop("batch_id"))),
+        Seq(partials(spark, s"$targetDir/transition_counts", "from", "to"))),
       channels, iters)
 
   /** Streaming record-linkage maintenance — the ingestion face of
@@ -1093,17 +921,9 @@ object StreamingTimeSeries {
   def startAgreementCountsQuery(pairs: DataFrame, matchCol: String,
       fieldCols: Seq[(String, String)], targetDir: String,
       checkpointDir: String) =
-    pairs
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Linkage
-          .agreementCounts(batch.toDF(), col(matchCol),
-            fieldCols.map { case (n, c) => n -> col(c) })
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/agreements")
-      }
-      .start()
+    appendPartials(pairs, checkpointDir, (s"$targetDir/agreements", b =>
+      graft.operators.Linkage.agreementCounts(b, col(matchCol),
+        fieldCols.map { case (n, c) => n -> col(c) })))
 
   /** Whole-stream linkage weights from the stored agreement partials —
     * bit-identical to batch [[graft.operators.Linkage.trainWeights]]. */
@@ -1111,8 +931,7 @@ object StreamingTimeSeries {
       targetDir: String, smoothing: Int = 1): DataFrame =
     graft.operators.Linkage.weightsFromCounts(
       graft.operators.Linkage.mergeAgreementCounts(
-        Seq(spark.read.parquet(s"$targetDir/agreements")
-          .dropDuplicates("field", "batch_id").drop("batch_id"))),
+        Seq(partials(spark, s"$targetDir/agreements", "field"))),
       smoothing)
 
   /** Streaming categorical-association maintenance — the ingestion face
@@ -1128,17 +947,9 @@ object StreamingTimeSeries {
   def startContingencyCellsQuery(events: DataFrame, groupCol: String,
       aCol: String, bCol: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .contingencyCells(batch.toDF(), Seq(col(groupCol)), col(aCol),
-            col(bCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/cells")
-      }
-      .start()
+    appendPartials(events, checkpointDir, (s"$targetDir/cells", b =>
+      graft.operators.Stats.contingencyCells(b, Seq(col(groupCol)),
+        col(aCol), col(bCol))))
 
   /** Whole-stream χ²/Cramér's V/MI from the stored cell partials —
     * bit-identical to the batch
@@ -1147,9 +958,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.contingencyFromCells(
       graft.operators.Stats.mergeContingencyCells(
-        Seq(spark.read.parquet(s"$targetDir/cells")
-          .dropDuplicates(groupCol, "__a", "__b", "batch_id")
-          .drop("batch_id")),
+        Seq(partials(spark, s"$targetDir/cells", groupCol, "__a", "__b")),
         Seq(groupCol)))
 
   /** Streaming cohort-retention maintenance — the ingestion face of
@@ -1157,25 +966,18 @@ object StreamingTimeSeries {
     * reduces to its DISTINCT (user, week) activity pairs before
     * anything is stored. A pair is an idempotent FACT — re-observing
     * it (later batch, at-least-once replay) changes nothing — so
-    * [[mergedRetention]] needs no batch_id bookkeeping: one
-    * dropDuplicates over the stored grid collapses both cross-batch
-    * repeats and replays, and the shared readout is bit-identical to
-    * the one-shot batch matrix. State is the user × week grid (one row
-    * per active-week, never per event). */
+    * [[mergedRetention]] ignores the batch id: one dropDuplicates over
+    * the stored grid collapses both cross-batch repeats and replays,
+    * and the shared readout is bit-identical to the one-shot batch
+    * matrix. State is the user × week grid (one row per active-week,
+    * never per event). */
   def startUserWeeksQuery(events: DataFrame, userCol: String,
       dateCol: String, targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.toDF()
-          .filter(col(userCol).isNotNull && col(dateCol).isNotNull)
-          .select(col(userCol).as("__u"),
-            graft.operators.TimeSeries.weekStart(col(dateCol)).as("__w"))
-          .distinct()
-          .write.mode("append").parquet(s"$targetDir/user_weeks")
-      }
-      .start()
+    appendPartials(events, checkpointDir, (s"$targetDir/user_weeks", b =>
+      b.filter(col(userCol).isNotNull && col(dateCol).isNotNull)
+        .select(col(userCol).as("__u"),
+          graft.operators.TimeSeries.weekStart(col(dateCol)).as("__w"))
+        .distinct()))
 
   /** Whole-stream retention matrix from the stored activity grid —
     * bit-identical to the batch
@@ -1183,7 +985,7 @@ object StreamingTimeSeries {
   def mergedRetention(spark: org.apache.spark.sql.SparkSession,
       targetDir: String): DataFrame =
     graft.operators.TimeSeries.retentionFromUserWeeks(
-      spark.read.parquet(s"$targetDir/user_weeks")
+      spark.read.parquet(s"$targetDir/user_weeks").drop("batch_id")
         .dropDuplicates("__u", "__w"))
 
   /** WATERMARKED cohort-retention maintenance — the bounded-state
@@ -1257,15 +1059,8 @@ object StreamingTimeSeries {
     * bigramCounts output schema). */
   def startLmCountsQuery(docs: DataFrame, textCol: String,
       targetDir: String, checkpointDir: String) =
-    docs
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.NgramLm.bigramCountsRaw(batch.toDF(), col(textCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(docs, checkpointDir, (targetDir, b =>
+      graft.operators.NgramLm.bigramCountsRaw(b, col(textCol))))
 
   /** The capped whole-stream LM from the stored bigram deltas —
     * bit-identical to the batch-trained model. */
@@ -1273,8 +1068,7 @@ object StreamingTimeSeries {
       targetDir: String, maxBigrams: Int = 250000): DataFrame =
     graft.operators.NgramLm.capBigrams(
       graft.operators.NgramLm.mergeBigramCounts(
-        Seq(spark.read.parquet(targetDir)
-          .dropDuplicates("w1", "w2", "batch_id").drop("batch_id"))),
+        Seq(partials(spark, targetDir, "w1", "w2"))),
       maxBigrams)
 
   /** Streaming calibration maintenance — the ingestion face of
@@ -1289,17 +1083,9 @@ object StreamingTimeSeries {
   def startCalibrationPartialsQuery(scored: DataFrame, groupCol: String,
       scoreCol: String, labelCol: String, targetDir: String,
       checkpointDir: String, nBins: Int = 10, quantScale: Double = 1e9) =
-    scored
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats.calibrationPartials(batch.toDF(),
-            Seq(col(groupCol)), col(scoreCol), col(labelCol), nBins,
-            quantScale)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(scored, checkpointDir, (targetDir, b =>
+      graft.operators.Stats.calibrationPartials(b, Seq(col(groupCol)),
+        col(scoreCol), col(labelCol), nBins, quantScale)))
 
   /** Whole-stream reliability table from the stored partials —
     * replay-guarded merge, bit-identical to the one-shot batch table. */
@@ -1321,9 +1107,7 @@ object StreamingTimeSeries {
       spark: org.apache.spark.sql.SparkSession, targetDir: String,
       groupCol: String): DataFrame =
     graft.operators.Stats.mergeCalibrationPartials(
-      Seq(spark.read.parquet(targetDir)
-        .dropDuplicates(groupCol, "bin", "batch_id").drop("batch_id")),
-      Seq(groupCol))
+      Seq(partials(spark, targetDir, groupCol, "bin")), Seq(groupCol))
 
   /** Streaming labeling-QA maintenance — the ingestion face of
     * [[graft.operators.Stats.classificationReport]] /
@@ -1336,16 +1120,9 @@ object StreamingTimeSeries {
   def startConfusionCountsQuery(preds: DataFrame, groupCol: String,
       truthCol: String, predCol: String, targetDir: String,
       checkpointDir: String) =
-    preds
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats.confusionCounts(batch.toDF(),
-            Seq(col(groupCol)), col(truthCol), col(predCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(preds, checkpointDir, (targetDir, b =>
+      graft.operators.Stats.confusionCounts(b, Seq(col(groupCol)),
+        col(truthCol), col(predCol))))
 
   /** Whole-stream per-class P/R/F1 from the stored confusion counts. */
   def mergedClassificationReport(spark: org.apache.spark.sql.SparkSession,
@@ -1369,9 +1146,7 @@ object StreamingTimeSeries {
   private def mergedConfusion(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.mergeConfusionCounts(
-      Seq(spark.read.parquet(targetDir)
-        .dropDuplicates(groupCol, "truth", "pred", "batch_id")
-        .drop("batch_id")),
+      Seq(partials(spark, targetDir, groupCol, "truth", "pred")),
       Seq(groupCol))
 
   /** Streaming association-rule maintenance — the ingestion face of

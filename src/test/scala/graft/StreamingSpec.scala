@@ -381,6 +381,43 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  test("streaming moment partials: equal partials from distinct batches both count; a replay counts once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("moments_eq_sink").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("moments_eq_ckpt").toString
+    val rng = new scala.util.Random(37)
+    val one = (0 until 200).map(i =>
+      (s"g${i % 2}", rng.nextInt(500).toLong, rng.nextInt(50).toLong))
+    val input = MemoryStream[(String, Long, Long)]
+    val q = StreamingTimeSeries.startMomentPartialsQuery(
+      input.toDF().toDF("g", "x", "y"), "g", "x", "y", s"$dir/data", ckpt)
+    try {
+      // two micro-batches with the same content store equal partial rows
+      // that differ only in their batch_id
+      input.addData(one: _*); q.processAllAvailable()
+      input.addData(one: _*); q.processAllAvailable()
+      val stored = spark.read.parquet(s"$dir/data")
+      assert(stored.count() == 4 &&
+        stored.select("batch_id").distinct().count() == 2 &&
+        stored.drop("batch_id").distinct().count() == 2,
+        "the two batches did not store equal partials under distinct ids")
+      def merged = StreamingTimeSeries.mergedMoments(spark, s"$dir/data", "g")
+        .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
+      val want = graft.operators.Stats.exactMoments(
+          (one ++ one).toDF("g", "x", "y"), Seq(col("g")), col("x"), col("y"))
+        .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
+      assert(merged == want,
+        "equal partials from distinct batches collapsed into one")
+      // an at-least-once replay of the second batch appends its rows again
+      // under the same batch_id: it must not count a third time
+      val last = stored.agg(max("batch_id")).head().getLong(0)
+      stored.filter(col("batch_id") === last)
+        .write.mode("append").parquet(s"$dir/data")
+      assert(merged == want, "a replayed micro-batch counted twice")
+    } finally q.stop()
+  }
+
   test("streaming seasonal partials: merged decompose == one-shot batch, bit for bit") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
