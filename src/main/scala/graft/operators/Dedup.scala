@@ -926,33 +926,6 @@ object Dedup {
 
   // ------------------------------------------------- duplicated substrings
 
-  /** Maximal duplicated token-span detection — the SUBSTRING-level
-    * complement of document near-dup (Lee et al., "Deduplicating Training
-    * Data Makes Language Models Better", ACL 2022: repeated spans past a
-    * length threshold are memorization fuel even when the containing
-    * documents differ). That paper builds one corpus-wide suffix array —
-    * which needs the corpus in a single address space; this is the
-    * distributed equivalent over fixed-width shingles: a token span of
-    * length ≥ minShingles + w − 1 repeated anywhere in the corpus is
-    * exactly a run of ≥ minShingles consecutive w-shingles whose corpus
-    * frequency is ≥ 2, so detection reduces to (1) a shingle frequency
-    * count and (2) per-document gaps-and-islands over duplicated
-    * positions. (Granularity is w tokens: spans are maximal to within
-    * one shingle, the standard trade for distributing the problem.)
-    * This is the span-LOCALIZATION step that
-    * [[TextAnalysis.duplicateWindows]] (hash + counts only) points to
-    * with "join back on the hash to locate spans".
-    *
-    * Scale: the corpus-wide shuffle keys are 8-byte xxhash64 digests
-    * (see [[shingleHits]] — equality-only use, so no engine-portable
-    * hex needed); the frequency filter is one window count partitioned
-    * by digest and the islands window partitions BY DOCUMENT, so no
-    * global sort exists. Shuffled rows are (id, pos, hash) — never
-    * text.
-    *
-    * Output: one maximal duplicated span per row — (id, span_start,
-    * span_end, n_shingles) in 0-based token coordinates; span length in
-    * tokens = span_end − span_start + 1 = n_shingles + w − 1. */
   /** The whitespace/lowercase tokenization every span operator reads —
     * ONE definition so [[duplicateSpans]], [[removeDupSpans]], and
     * [[maxDupSpans]] (and their oracles) can never desynchronize. */
@@ -981,6 +954,37 @@ object Dedup {
       .select(col("id"), col("pos"), xxhash64(col("s")).as("h"))
   }
 
+  /** Maximal duplicated token-span detection — the SUBSTRING-level
+    * complement of document near-dup (Lee et al., "Deduplicating Training
+    * Data Makes Language Models Better", ACL 2022: repeated spans past a
+    * length threshold are memorization fuel even when the containing
+    * documents differ). That paper builds one corpus-wide suffix array —
+    * which needs the corpus in a single address space; this is the
+    * distributed equivalent over fixed-width shingles: a token span of
+    * length ≥ minShingles + w − 1 repeated anywhere in the corpus is
+    * exactly a run of ≥ minShingles consecutive w-shingles whose corpus
+    * frequency is ≥ 2, so detection reduces to (1) a shingle frequency
+    * count and (2) per-document gaps-and-islands over duplicated
+    * positions. (Granularity is w tokens: spans are maximal to within
+    * one shingle, the standard trade for distributing the problem.)
+    * This is the span-LOCALIZATION step that
+    * [[TextAnalysis.duplicateWindows]] (hash + counts only) points to
+    * with "join back on the hash to locate spans".
+    *
+    * Scale: the corpus-wide shuffle keys are 8-byte xxhash64 digests
+    * (see [[shingleHits]] — equality-only use, so no engine-portable
+    * hex needed); the frequency filter is one window count partitioned
+    * by digest and the islands window partitions BY DOCUMENT, so no
+    * global sort exists. Shuffled rows are (id, pos, hash) — never
+    * text. Hot digest: the frequency window puts a digest's whole
+    * posting (every (id, pos) occurrence) into one window partition,
+    * so a shingle repeated across most of the corpus (boilerplate, a
+    * stop-word run) lands in one task. Unlike [[maxDupSpans]], this
+    * operator has no `maxPosting` fail-fast.
+    *
+    * Output: one maximal duplicated span per row — (id, span_start,
+    * span_end, n_shingles) in 0-based token coordinates; span length in
+    * tokens = span_end − span_start + 1 = n_shingles + w − 1. */
   def duplicateSpans(df: DataFrame, idCol: Column, textCol: Column,
       w: Int = 5, minShingles: Int = 3): DataFrame = {
     require(w >= 1 && minShingles >= 1, "w and minShingles must be >= 1")
@@ -1024,12 +1028,15 @@ object Dedup {
     * that a removable span overlapping a canonical window is excised
     * only outside it (a fragment survives).
     *
-    * Scale shape: canonical election is a groupBy-min on the digest (no
-    * window over a hot hash), islands partition by document, and the
-    * REWRITE never shuffles text — the tiny (id, spans) table joins back
-    * to the corpus and a codegen'd index-aware `filter` drops covered
-    * tokens in the scan. Only (id, pos, digest) rows ever cross an
-    * exchange.
+    * Scale shape: canonical election is a count and a
+    * `min(struct(id, pos))` window over one digest partitioning
+    * (`Window.partitionBy("h")`), islands partition by document, and
+    * the REWRITE never shuffles text — the tiny (id, spans) table joins
+    * back to the corpus and a codegen'd index-aware `filter` drops
+    * covered tokens in the scan. Only (id, pos, digest) rows ever cross
+    * an exchange. Hot digest: as in [[duplicateSpans]], a digest's
+    * whole posting lands in one window partition, and there is no
+    * `maxPosting` fail-fast like [[maxDupSpans]]'s.
     *
     * Output: (id, n_tokens, n_removed, clean_text) for EVERY input
     * document (unaffected docs pass through with n_removed = 0);

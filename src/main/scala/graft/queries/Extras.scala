@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Filters, RefCluster, Regions, Region}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -622,27 +622,40 @@ object Extras {
         pmod(col("doc_id"), lit(2)) === 0)
       .orderBy("lang")
 
-  /** Kaplan–Meier survival per cohort ([[graft.operators.Stats
-    * .kaplanMeier]]) over the events table: a user's duration is the
-    * day span between their first and last activity; a user whose last
-    * activity predates the corpus maximum by more than 7 days counts
-    * as a churn EVENT, otherwise right-censored (still active at
-    * cutoff) — both faces derive the identical observations, so the
-    * estimator itself is what the oracle checks. Cohort = user_id mod
-    * 3. survival is a product of exact-count ratios (·, / only) —
-    * hashes unrounded; the mirror replays the ascending-time recursion
-    * stepwise. */
-  def cKaplanMeier(s: SparkSession, dir: String): DataFrame = {
+  /** The churn population every survival and concordance query below
+    * observes: one subject per (user_id, event_type) episode of the
+    * events table. duration = the episode's day span between its first
+    * and last activity; churned = its last activity predates the corpus
+    * maximum by more than 7 days (otherwise right-censored: still active
+    * at the cutoff); risk = its event count. Per-user subjects would
+    * never churn (every user stays active to the horizon at each test
+    * scale); sparse event types genuinely end early, so events,
+    * censoring, duration ties and risk ties all occur. Callers add their
+    * own grouping column (`cohort` = "c" + user_id mod 3, or `g` =
+    * "all") and extras; each oracle mirrors this as its `u` CTE grouped
+    * BY user_id, event_type, crossed with the one-row `gmax` horizon. */
+  private def churnEpisodes(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
       col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
+    val episodes = e.groupBy(col("user_id"), col("event_type"))
       .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
         .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
+        max(to_date(col("ts"))).as("__last"),
+        count(lit(1)).cast("double").as("risk"))
     val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
-      .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
+    episodes.crossJoin(broadcast(horizon))
       .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
+  }
+
+  /** Kaplan–Meier survival per cohort ([[graft.operators.Stats
+    * .kaplanMeier]]) over the [[churnEpisodes]] population — both faces
+    * derive the identical observations, so the estimator itself is
+    * what the oracle checks. Cohort = user_id mod 3. survival is a
+    * product of exact-count ratios (·, / only) — hashes unrounded; the
+    * mirror replays the ascending-time recursion stepwise. */
+  def cKaplanMeier(s: SparkSession, dir: String): DataFrame = {
+    val obs = churnEpisodes(s, dir)
+      .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
     graft.operators.Stats.kaplanMeier(obs, Seq("cohort"),
         col("duration"), col("churned"))
       .orderBy("cohort", "t")
@@ -656,16 +669,8 @@ object Extras {
     * the identical recursion), so cum_hazard/var_hazard hash with no
     * rounding. */
   def cNelsonAalen(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.nelsonAalen(obs, Seq("cohort"),
         col("duration"), col("churned"))
       .orderBy("cohort", "t")
@@ -677,16 +682,8 @@ object Extras {
     * in-row folds each, then one subtraction and one √; every column
     * hashes unrounded. */
   def cRmstDiff(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("g", lit("all"))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.rmstDiff(obs, Seq("g"), col("duration"),
         col("churned"), pmod(col("user_id"), lit(2)) === 0, tau = 14.0)
       .orderBy("g")
@@ -694,25 +691,15 @@ object Extras {
 
   /** Competing-risks cumulative incidence ([[graft.operators.Stats
     * .aalenJohansen]]): the c_log_rank observation fixture with churn
-    * split into two competing causes (even vs odd total event count) —
+    * split into two competing causes (even vs odd episode event count) —
     * cause-specific exact counts per day, the AJ recursion carrying
     * (used, survival, cif1, cif2); all ops +,·,/ so every column
     * hashes unrounded. */
   def cCumInc(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"),
-        count(lit(1)).as("__cnt"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("g", lit("all"))
-      .withColumn("cause",
-        when(col("__last") >= date_sub(col("__gmax"), 7), 0)
-          .otherwise(when(pmod(col("__cnt"), lit(2)) === 0, 1)
-            .otherwise(2)))
+      .withColumn("cause", when(!col("churned"), 0)
+        .otherwise(when(pmod(col("risk"), lit(2)) === 0, 1).otherwise(2)))
     graft.operators.Stats.aalenJohansen(obs, Seq("g"), col("duration"),
         col("cause"), nCauses = 2)
       .orderBy("g", "t", "cause")
@@ -819,6 +806,17 @@ object Extras {
       .orderBy("lang")
   }
 
+  /** The covariates of every logistic propensity fit here (a_logistic_fit
+    * and the three ATE queries): scaled length (n_chars / 100) and
+    * scaled English-stopword hits (/ 10) — the x1, x2 of the mirrors'
+    * `dat` CTE. */
+  private def propensityCovariates: Seq[Column] = {
+    import graft.operators.{TextAnalysis => TA}
+    Seq(col("n_chars").cast("double") / lit(100.0),
+      TA.vocabHits(TA.wsTokens(lower(col("text"))), TA.EnStop)
+        .cast("double") / lit(10.0))
+  }
+
   /** Propensity-stratified ATE on documents ([[graft.operators.Stats
     * .propensityStratifiedAte]]): "treatment" = lang-en, propensity fit
     * on the a_logistic_fit features (scaled length + stopword hits),
@@ -826,14 +824,11 @@ object Extras {
     * — the full composed causal pipeline, weights re-derived by the
     * mirror's unrolled Newton CTEs. */
   def cPropensityAte(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{TextAnalysis => TA}
     val d = t(s, dir, "documents").filter(col("doc_id").isNotNull &&
       col("source").isNotNull && col("text").isNotNull &&
       col("n_chars").isNotNull)
     graft.operators.Stats.propensityStratifiedAte(d, Seq("source"),
-        Seq(col("n_chars").cast("double") / lit(100.0),
-          TA.vocabHits(TA.wsTokens(lower(col("text"))), TA.EnStop)
-            .cast("double") / lit(10.0)),
+        propensityCovariates,
         coalesce(col("lang") === "en", lit(false)),
         length(col("text")).cast("double") / lit(100.0),
         col("doc_id"))
@@ -846,13 +841,9 @@ object Extras {
     * to exact BIGINTs — the readout is two BIGINT ratios and a
     * subtraction. */
   def cIpwAte(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{TextAnalysis => TA}
     val d = t(s, dir, "documents").filter(col("text").isNotNull &&
       col("n_chars").isNotNull)
-    graft.operators.Stats.ipwAte(d,
-      Seq(col("n_chars").cast("double") / lit(100.0),
-        TA.vocabHits(TA.wsTokens(lower(col("text"))), TA.EnStop)
-          .cast("double") / lit(10.0)),
+    graft.operators.Stats.ipwAte(d, propensityCovariates,
       coalesce(col("lang") === "en", lit(false)),
       length(col("text")).cast("double") / lit(100.0))
   }
@@ -863,13 +854,9 @@ object Extras {
     * quantized BIGINTs, the same Cramer tree as the Newton step, and
     * a quantized per-row correction-term sum. */
   def cAipwAte(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{TextAnalysis => TA}
     val d = t(s, dir, "documents").filter(col("text").isNotNull &&
       col("n_chars").isNotNull)
-    graft.operators.Stats.aipwAte(d,
-      Seq(col("n_chars").cast("double") / lit(100.0),
-        TA.vocabHits(TA.wsTokens(lower(col("text"))), TA.EnStop)
-          .cast("double") / lit(10.0)),
+    graft.operators.Stats.aipwAte(d, propensityCovariates,
       coalesce(col("lang") === "en", lit(false)),
       length(col("text")).cast("double") / lit(100.0))
   }
@@ -920,16 +907,8 @@ object Extras {
     * per-stratum (O−E, V) from the same recursion, folded in fixed
     * ascending-stratum order; +,·,/,√ only — hashes unrounded. */
   def cStratifiedLogRank(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("g", lit("all"))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.stratifiedLogRank(obs, Seq("g"),
         pmod(col("user_id"), lit(3)), col("duration"), col("churned"),
         pmod(col("user_id"), lit(2)) === 0)
@@ -973,16 +952,8 @@ object Extras {
     * c_kaplan_meier fixture — one more accumulator in the same fold;
     * all ops +,·,/, so rmst hashes unrounded. */
   def cRmst(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.rmst(obs, Seq("cohort"),
         col("duration"), col("churned"), tau = 14.0)
       .orderBy("cohort")
@@ -1012,16 +983,8 @@ object Extras {
     * ascending-time fold, and the CI is +,·,/,√-only (no log-log, no
     * libm), so every column hashes unrounded. */
   def cKmGreenwood(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.kaplanMeierGreenwood(obs, Seq("cohort"),
         col("duration"), col("churned"))
       .orderBy("cohort", "t")
@@ -1032,16 +995,8 @@ object Extras {
     * family on the c_log_rank fixture — IEEE √ is correctly rounded,
     * so oe/v/chi2/z hash unrounded like the other two tests. */
   def cTaroneWare(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("g", lit("all"))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.taroneWareLogRank(obs, Seq("g"),
         col("duration"), col("churned"),
         pmod(col("user_id"), lit(2)) === 0)
@@ -1054,16 +1009,8 @@ object Extras {
     * contribution carries an n (and V an n²) factor inside the same
     * ascending-time fold, mirrored by the same recursive CTE shape. */
   def cGehanLogRank(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("g", lit("all"))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.gehanLogRank(obs, Seq("g"), col("duration"),
         col("churned"), pmod(col("user_id"), lit(2)) === 0)
       .orderBy("g")
@@ -1280,16 +1227,8 @@ object Extras {
     * column hashes unrounded; the mirror replays the fold as a
     * recursive CTE. */
   def cLogRank(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("g", lit("all"))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.logRank(obs, Seq("g"), col("duration"),
         col("churned"), pmod(col("user_id"), lit(2)) === 0)
       .orderBy("g")
@@ -1434,14 +1373,9 @@ object Extras {
     * (the micro-logit move), the 3×3 Cramer solve is a fixed
     * expression tree, so the fitted weights hash bit-for-bit; the
     * mirror unrolls the same three iterations as chained CTEs. */
-  def aLogisticFit(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{TextAnalysis => TA}
+  def aLogisticFit(s: SparkSession, dir: String): DataFrame =
     graft.operators.Stats.logisticFit(t(s, dir, "documents"),
-      Seq(col("n_chars").cast("double") / lit(100.0),
-        TA.vocabHits(TA.wsTokens(lower(col("text"))), TA.EnStop)
-          .cast("double") / lit(10.0)),
-      coalesce(col("lang") === "en", lit(false)))
-  }
+      propensityCovariates, coalesce(col("lang") === "en", lit(false)))
 
   /** Quality-score calibration ([[graft.operators.Stats.isotonicFit]]):
     * the monotone fit of P(lang = 'en' | binned length) per source —
@@ -1547,26 +1481,13 @@ object Extras {
   /** Harrell's C-index per synthetic cohort ([[graft.operators
     * .Concordance.harrellC]]): the c_kaplan_meier fixture (duration =
     * activity span, churned = inactive 7 days before the horizon)
-    * graded by risk = per-user event count. The oracle is the NAIVE
+    * graded by risk = the episode's event count. The oracle is the NAIVE
     * comparable-pair join — independent enumeration against the
     * bucket-grid decomposition; counts are exact BIGINTs (doubled
     * concordance), c_index one division. */
   def cHarrellC(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    // subject = (user, event_type) episode: the per-user fixture never
-    // churns (every one of the ~150 users stays active to the
-    // horizon); sparse event types genuinely end early, so events,
-    // censoring, duration ties AND risk ties all occur
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"),
-        count(lit(1)).cast("double").as("risk"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Concordance.harrellC(obs, Seq("cohort"),
         col("duration"), col("churned"), col("risk"))
       .orderBy("cohort")
@@ -1577,17 +1498,8 @@ object Extras {
     * case/control labels fed to the exact Mann–Whitney machinery —
     * BIGINT counts, one division, hashes unrounded. */
   def cAucT(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"),
-        count(lit(1)).cast("double").as("risk"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Concordance.aucT(obs, Seq("cohort"),
         col("duration"), col("churned"), col("risk"),
         Seq(15.0, 20.0, 25.0))
@@ -1601,18 +1513,9 @@ object Extras {
     * correlated last-step subqueries, and the weighted squared terms
     * quantized to BIGINT before the only cross-row sum. */
   def cBrierT(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"),
-        count(lit(1)).cast("double").as("risk"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
     val hs = Seq(15.0, 20.0, 25.0)
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
       .withColumn("pred", array(hs.map(h => lit(1.0) /
         (lit(1.0) + lit(h) / (lit(1.0) + col("risk")))): _*))
     graft.operators.Concordance.brierIpcw(obs, Seq("cohort"),
@@ -1626,17 +1529,8 @@ object Extras {
     * credits by the naive pair join, and replays the identical
     * floor-quantized weight chain. */
   def cUnoC(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"),
-        count(lit(1)).cast("double").as("risk"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Concordance.unoC(obs, Seq("cohort"),
         col("duration"), col("churned"), col("risk"), tau = 25.0)
       .orderBy("cohort")
@@ -1649,16 +1543,8 @@ object Extras {
     * quantize per time so the cross-time sums are associative
     * BIGINTs the mirror replays. */
   def cTrendLogRank(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.trendLogRank(obs, Seq("cohort"),
         col("duration"), col("churned"), pmod(col("user_id"), lit(4)))
       .orderBy("cohort")
@@ -1671,17 +1557,8 @@ object Extras {
     * the mirror replays the NTILE, the quantized prediction means,
     * and the per-decile KM recursion. */
   def cSurvCalibration(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"),
-        count(lit(1)).cast("double").as("risk"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
       .withColumn("pred", lit(1.0) - lit(1.0) /
         (lit(1.0) + lit(25.0) / (lit(1.0) + col("risk"))))
       .withColumn("sid", concat(col("user_id").cast("string"), lit("_"),
@@ -1698,16 +1575,8 @@ object Extras {
     * own follow-up; Vandenbroucke √-CI. The mirror replays the pooled
     * NA recursion, the step lookups, and the floor chain. */
   def cSmr(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Stats.smr(obs, Seq("cohort"), col("duration"),
         col("churned"))
       .orderBy("cohort")
@@ -1718,16 +1587,8 @@ object Extras {
     * three (t₀, s) pairs — two step lookups on the KM grid and one
     * division; the mirror replays the recursion + lookups. */
   def cCondSurvival(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Concordance.conditionalSurvival(obs, Seq("cohort"),
         col("duration"), col("churned"),
         Seq((10.0, 5.0), (15.0, 10.0), (20.0, 5.0)))
@@ -1740,17 +1601,8 @@ object Extras {
     * replays the censoring-KM recursion, the per-case floor chain,
     * and the weighted doubled-credit window sums. */
   def cAucTIpcw(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").filter(col("user_id").isNotNull &&
-      col("ts").isNotNull)
-    val users = e.groupBy(col("user_id"), col("event_type"))
-      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-        .cast("double").as("duration"),
-        max(to_date(col("ts"))).as("__last"),
-        count(lit(1)).cast("double").as("risk"))
-    val horizon = e.agg(max(to_date(col("ts"))).as("__gmax"))
-    val obs = users.crossJoin(broadcast(horizon))
+    val obs = churnEpisodes(s, dir)
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(3))))
-      .withColumn("churned", col("__last") < date_sub(col("__gmax"), 7))
     graft.operators.Concordance.aucTIpcw(obs, Seq("cohort"),
         col("duration"), col("churned"), col("risk"),
         Seq(15.0, 20.0, 25.0))
@@ -1949,16 +1801,17 @@ object Extras {
         |  END AS t
         |FROM m ORDER BY 1""".stripMargin
 
-  /** a_logistic_fit mirror: the three Newton iterations UNROLLED as
-    * chained CTEs (no recursive aggregation over a recursive reference
-    * — engines restrict that), each one computing the same quantized
-    * BIGINT gradient/Hessian sums and the same fixed-order 3×3 Cramer
-    * solve as `Stats.logisticFit`/`solveFixed`. Multiplications by the
-    * intercept's 1.0 are dropped on both sides (IEEE-exact no-ops). */
-  private val logisticFitOracle: String = {
+  /** The logistic-fit Newton chain as SQL CTEs over a `dat` CTE of
+    * (y, x1, x2): `w0` = 0, then three UNROLLED iterations (no recursive
+    * aggregation over a recursive reference — engines restrict that).
+    * Iteration i takes quantized BIGINT gradient/Hessian sums under
+    * w_{i-1} (`a<i>`), dequantizes them (`s<i>`) and runs the
+    * fixed-order symmetric 3×3 Cramer solve (`d<i>`), producing `w<i>`
+    * — the chain `Stats.logisticFit`/`solveFixed` runs. The
+    * a_logistic_fit, c_propensity_ate, c_ipw_ate and c_aipw_ate mirrors
+    * all read the fitted weights from `w3`. */
+  private def newtonChainSql: String = {
     val S = "1000000.0"
-    // one Newton iteration: quantized sums under w_{i-1}, then the
-    // dequantized symmetric solve, producing w_i
     def iter(i: Int): String = {
       val prev = s"w${i - 1}"
       s"""a$i AS (SELECT
@@ -1998,86 +1851,46 @@ object Extras {
          |w$i AS (SELECT b0 + dt0 / det AS b0, b1 + dt1 / det AS b1,
          |    b2 + dt2 / det AS b2 FROM d$i)""".stripMargin
     }
-    s"""WITH dat AS (SELECT
-       |    CASE WHEN COALESCE(lang = 'en', FALSE) THEN 1.0 ELSE 0.0 END AS y,
+    ("w0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)" +: (1 to 3).map(iter))
+      .mkString(",\n")
+  }
+
+  /** The (y, x1, x2) columns of the Newton-chain mirrors' `dat` CTE:
+    * y = lang-en, x1/x2 = the SQL twin of [[propensityCovariates]]. */
+  private def newtonDatXs: String =
+    s"""    CASE WHEN COALESCE(lang = 'en', FALSE) THEN 1.0 ELSE 0.0 END AS y,
        |    CAST(n_chars AS DOUBLE) / 100.0 AS x1,
        |    CAST(length(list_filter(
        |        string_split_regex(trim(lower(text)), '\\s+'),
        |        x -> list_contains(
        |          ['the', 'a', 'of', 'and', 'to', 'in', 'is', 'that'], x)))
-       |      AS DOUBLE) / 10.0 AS x2
+       |      AS DOUBLE) / 10.0 AS x2""".stripMargin
+
+  /** a_logistic_fit mirror: [[newtonChainSql]] over the documents'
+    * [[newtonDatXs]]. Multiplications by the intercept's 1.0 are dropped
+    * on both sides (IEEE-exact no-ops). */
+  private val logisticFitOracle: String =
+    s"""WITH dat AS (SELECT
+       |$newtonDatXs
        |  FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL),
-       |w0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2),
-       |${iter(1)},
-       |${iter(2)},
-       |${iter(3)}
+       |$newtonChainSql
        |SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM dat) AS n,
        |  b0 AS w0, b1 AS w1, b2 AS w2 FROM w3""".stripMargin
-  }
 
   /** c_propensity_ate mirror: the a_logistic_fit Newton chain verbatim
     * (same dat features, same quantized sums, same Cramer solve), then
     * the same sigmoid scoring, NTILE(5) ORDER BY (p, id), exact
     * quantized per-stratum outcome masses, and the ascending-stratum
     * list_reduce fold with zero entries for one-armed strata. */
-  private val propensityAteOracle: String = {
-    val S = "1000000.0"
-    def iter(i: Int): String = {
-      val prev = s"w${i - 1}"
-      s"""a$i AS (SELECT
-         |    SUM(CAST(floor((y - p) * $S) AS BIGINT)) AS q_g0,
-         |    SUM(CAST(floor(((y - p) * x1) * $S) AS BIGINT)) AS q_g1,
-         |    SUM(CAST(floor(((y - p) * x2) * $S) AS BIGINT)) AS q_g2,
-         |    SUM(CAST(floor((p * (1.0 - p)) * $S) AS BIGINT)) AS q_h00,
-         |    SUM(CAST(floor(((p * (1.0 - p)) * x1) * $S) AS BIGINT)) AS q_h01,
-         |    SUM(CAST(floor(((p * (1.0 - p)) * x2) * $S) AS BIGINT)) AS q_h02,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x1) * x1) * $S) AS BIGINT)) AS q_h11,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x1) * x2) * $S) AS BIGINT)) AS q_h12,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x2) * x2) * $S) AS BIGINT)) AS q_h22
-         |  FROM (SELECT y, x1, x2,
-         |      1.0 / (1.0 + exp(-((1.0 * b0 + x1 * b1) + x2 * b2))) AS p
-         |    FROM dat CROSS JOIN $prev) q),
-         |s$i AS (SELECT b0, b1, b2,
-         |    CAST(q_g0 AS DOUBLE) / $S AS g0,
-         |    CAST(q_g1 AS DOUBLE) / $S AS g1,
-         |    CAST(q_g2 AS DOUBLE) / $S AS g2,
-         |    CAST(q_h00 AS DOUBLE) / $S AS a00,
-         |    CAST(q_h01 AS DOUBLE) / $S AS a01,
-         |    CAST(q_h02 AS DOUBLE) / $S AS a02,
-         |    CAST(q_h11 AS DOUBLE) / $S AS a11,
-         |    CAST(q_h12 AS DOUBLE) / $S AS a12,
-         |    CAST(q_h22 AS DOUBLE) / $S AS a22
-         |  FROM a$i CROSS JOIN $prev),
-         |d$i AS (SELECT b0, b1, b2, g0, g1, g2,
-         |    a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02)
-         |      + a02 * (a01 * a12 - a11 * a02) AS det,
-         |    g0 * (a11 * a22 - a12 * a12) - a01 * (g1 * a22 - a12 * g2)
-         |      + a02 * (g1 * a12 - a11 * g2) AS dt0,
-         |    a00 * (g1 * a22 - a12 * g2) - g0 * (a01 * a22 - a12 * a02)
-         |      + a02 * (a01 * g2 - g1 * a02) AS dt1,
-         |    a00 * (a11 * g2 - g1 * a12) - a01 * (a01 * g2 - g1 * a02)
-         |      + g0 * (a01 * a12 - a11 * a02) AS dt2
-         |  FROM s$i),
-         |w$i AS (SELECT b0 + dt0 / det AS b0, b1 + dt1 / det AS b1,
-         |    b2 + dt2 / det AS b2 FROM d$i)""".stripMargin
-    }
+  private val propensityAteOracle: String =
     s"""WITH dat AS (SELECT doc_id AS id, source AS grp,
-       |    CASE WHEN COALESCE(lang = 'en', FALSE) THEN 1.0 ELSE 0.0 END AS y,
-       |    CAST(n_chars AS DOUBLE) / 100.0 AS x1,
-       |    CAST(length(list_filter(
-       |        string_split_regex(trim(lower(text)), '\\s+'),
-       |        x -> list_contains(
-       |          ['the', 'a', 'of', 'and', 'to', 'in', 'is', 'that'], x)))
-       |      AS DOUBLE) / 10.0 AS x2,
+       |$newtonDatXs,
        |    COALESCE(lang = 'en', FALSE) AS t,
        |    CAST(LENGTH(text) AS DOUBLE) / 100.0 AS y2
        |  FROM documents WHERE doc_id IS NOT NULL
        |    AND source IS NOT NULL
        |    AND n_chars IS NOT NULL AND text IS NOT NULL),
-       |w0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2),
-       |${iter(1)},
-       |${iter(2)},
-       |${iter(3)},
+       |$newtonChainSql,
        |sc AS (SELECT grp, id, t, y2,
        |    1.0 / (1.0 + exp(-((1.0 * b0 + x1 * b1) + x2 * b2))) AS p
        |  FROM dat CROSS JOIN w3),
@@ -2123,67 +1936,18 @@ object Extras {
        |  ate
        |FROM cell JOIN at ON at.grp = cell.grp
        |ORDER BY source, stratum""".stripMargin
-  }
 
   /** c_ipw_ate mirror: the same Newton chain (no doc_id filter — the
     * estimator needs no id), clipped sigmoid weights, quantized
     * weighted sums, two BIGINT ratios and a subtraction. */
   private val ipwAteOracle: String = {
     val S = "1000000.0"
-    def iter(i: Int): String = {
-      val prev = s"w${i - 1}"
-      s"""a$i AS (SELECT
-         |    SUM(CAST(floor((y - p) * $S) AS BIGINT)) AS q_g0,
-         |    SUM(CAST(floor(((y - p) * x1) * $S) AS BIGINT)) AS q_g1,
-         |    SUM(CAST(floor(((y - p) * x2) * $S) AS BIGINT)) AS q_g2,
-         |    SUM(CAST(floor((p * (1.0 - p)) * $S) AS BIGINT)) AS q_h00,
-         |    SUM(CAST(floor(((p * (1.0 - p)) * x1) * $S) AS BIGINT)) AS q_h01,
-         |    SUM(CAST(floor(((p * (1.0 - p)) * x2) * $S) AS BIGINT)) AS q_h02,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x1) * x1) * $S) AS BIGINT)) AS q_h11,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x1) * x2) * $S) AS BIGINT)) AS q_h12,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x2) * x2) * $S) AS BIGINT)) AS q_h22
-         |  FROM (SELECT y, x1, x2,
-         |      1.0 / (1.0 + exp(-((1.0 * b0 + x1 * b1) + x2 * b2))) AS p
-         |    FROM dat CROSS JOIN $prev) q),
-         |s$i AS (SELECT b0, b1, b2,
-         |    CAST(q_g0 AS DOUBLE) / $S AS g0,
-         |    CAST(q_g1 AS DOUBLE) / $S AS g1,
-         |    CAST(q_g2 AS DOUBLE) / $S AS g2,
-         |    CAST(q_h00 AS DOUBLE) / $S AS a00,
-         |    CAST(q_h01 AS DOUBLE) / $S AS a01,
-         |    CAST(q_h02 AS DOUBLE) / $S AS a02,
-         |    CAST(q_h11 AS DOUBLE) / $S AS a11,
-         |    CAST(q_h12 AS DOUBLE) / $S AS a12,
-         |    CAST(q_h22 AS DOUBLE) / $S AS a22
-         |  FROM a$i CROSS JOIN $prev),
-         |d$i AS (SELECT b0, b1, b2, g0, g1, g2,
-         |    a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02)
-         |      + a02 * (a01 * a12 - a11 * a02) AS det,
-         |    g0 * (a11 * a22 - a12 * a12) - a01 * (g1 * a22 - a12 * g2)
-         |      + a02 * (g1 * a12 - a11 * g2) AS dt0,
-         |    a00 * (g1 * a22 - a12 * g2) - g0 * (a01 * a22 - a12 * a02)
-         |      + a02 * (a01 * g2 - g1 * a02) AS dt1,
-         |    a00 * (a11 * g2 - g1 * a12) - a01 * (a01 * g2 - g1 * a02)
-         |      + g0 * (a01 * a12 - a11 * a02) AS dt2
-         |  FROM s$i),
-         |w$i AS (SELECT b0 + dt0 / det AS b0, b1 + dt1 / det AS b1,
-         |    b2 + dt2 / det AS b2 FROM d$i)""".stripMargin
-    }
     s"""WITH dat AS (SELECT
-       |    CASE WHEN COALESCE(lang = 'en', FALSE) THEN 1.0 ELSE 0.0 END AS y,
-       |    CAST(n_chars AS DOUBLE) / 100.0 AS x1,
-       |    CAST(length(list_filter(
-       |        string_split_regex(trim(lower(text)), '\\s+'),
-       |        x -> list_contains(
-       |          ['the', 'a', 'of', 'and', 'to', 'in', 'is', 'that'], x)))
-       |      AS DOUBLE) / 10.0 AS x2,
+       |$newtonDatXs,
        |    COALESCE(lang = 'en', FALSE) AS t,
        |    CAST(LENGTH(text) AS DOUBLE) / 100.0 AS y2
        |  FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL),
-       |w0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2),
-       |${iter(1)},
-       |${iter(2)},
-       |${iter(3)},
+       |$newtonChainSql,
        |sc AS (SELECT t, y2,
        |    least(greatest(1.0 / (1.0 + exp(-((1.0 * b0 + x1 * b1)
        |        + x2 * b2))), CAST(0.01 AS DOUBLE)),
@@ -2217,45 +1981,6 @@ object Extras {
     * quantized per-row AIPW term sum. */
   private val aipwAteOracle: String = {
     val S = "1000000.0"
-    def iter(i: Int): String = {
-      val prev = s"w${i - 1}"
-      s"""a$i AS (SELECT
-         |    SUM(CAST(floor((y - p) * $S) AS BIGINT)) AS q_g0,
-         |    SUM(CAST(floor(((y - p) * x1) * $S) AS BIGINT)) AS q_g1,
-         |    SUM(CAST(floor(((y - p) * x2) * $S) AS BIGINT)) AS q_g2,
-         |    SUM(CAST(floor((p * (1.0 - p)) * $S) AS BIGINT)) AS q_h00,
-         |    SUM(CAST(floor(((p * (1.0 - p)) * x1) * $S) AS BIGINT)) AS q_h01,
-         |    SUM(CAST(floor(((p * (1.0 - p)) * x2) * $S) AS BIGINT)) AS q_h02,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x1) * x1) * $S) AS BIGINT)) AS q_h11,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x1) * x2) * $S) AS BIGINT)) AS q_h12,
-         |    SUM(CAST(floor((((p * (1.0 - p)) * x2) * x2) * $S) AS BIGINT)) AS q_h22
-         |  FROM (SELECT y, x1, x2,
-         |      1.0 / (1.0 + exp(-((1.0 * b0 + x1 * b1) + x2 * b2))) AS p
-         |    FROM dat CROSS JOIN $prev) q),
-         |s$i AS (SELECT b0, b1, b2,
-         |    CAST(q_g0 AS DOUBLE) / $S AS g0,
-         |    CAST(q_g1 AS DOUBLE) / $S AS g1,
-         |    CAST(q_g2 AS DOUBLE) / $S AS g2,
-         |    CAST(q_h00 AS DOUBLE) / $S AS a00,
-         |    CAST(q_h01 AS DOUBLE) / $S AS a01,
-         |    CAST(q_h02 AS DOUBLE) / $S AS a02,
-         |    CAST(q_h11 AS DOUBLE) / $S AS a11,
-         |    CAST(q_h12 AS DOUBLE) / $S AS a12,
-         |    CAST(q_h22 AS DOUBLE) / $S AS a22
-         |  FROM a$i CROSS JOIN $prev),
-         |d$i AS (SELECT b0, b1, b2, g0, g1, g2,
-         |    a00 * (a11 * a22 - a12 * a12) - a01 * (a01 * a22 - a12 * a02)
-         |      + a02 * (a01 * a12 - a11 * a02) AS det,
-         |    g0 * (a11 * a22 - a12 * a12) - a01 * (g1 * a22 - a12 * g2)
-         |      + a02 * (g1 * a12 - a11 * g2) AS dt0,
-         |    a00 * (g1 * a22 - a12 * g2) - g0 * (a01 * a22 - a12 * a02)
-         |      + a02 * (a01 * g2 - g1 * a02) AS dt1,
-         |    a00 * (a11 * g2 - g1 * a12) - a01 * (a01 * g2 - g1 * a02)
-         |      + g0 * (a01 * a12 - a11 * a02) AS dt2
-         |  FROM s$i),
-         |w$i AS (SELECT b0 + dt0 / det AS b0, b1 + dt1 / det AS b1,
-         |    b2 + dt2 / det AS b2 FROM d$i)""".stripMargin
-    }
     def headCramer(p: String): String =
       s"""    ${p}g0 * (${p}a11 * ${p}a22 - ${p}a12 * ${p}a12)
          |      - ${p}a01 * (${p}g1 * ${p}a22 - ${p}a12 * ${p}g2)
@@ -2290,20 +2015,11 @@ object Extras {
          |    CAST(SUM(CASE WHEN $cond THEN CAST(floor((x2 * y2) * $S)
          |      AS BIGINT) ELSE 0 END) AS DOUBLE) / $S AS ${p}g2""".stripMargin
     s"""WITH dat AS (SELECT
-       |    CASE WHEN COALESCE(lang = 'en', FALSE) THEN 1.0 ELSE 0.0 END AS y,
-       |    CAST(n_chars AS DOUBLE) / 100.0 AS x1,
-       |    CAST(length(list_filter(
-       |        string_split_regex(trim(lower(text)), '\\s+'),
-       |        x -> list_contains(
-       |          ['the', 'a', 'of', 'and', 'to', 'in', 'is', 'that'], x)))
-       |      AS DOUBLE) / 10.0 AS x2,
+       |$newtonDatXs,
        |    COALESCE(lang = 'en', FALSE) AS t,
        |    CAST(LENGTH(text) AS DOUBLE) / 100.0 AS y2
        |  FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL),
-       |w0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2),
-       |${iter(1)},
-       |${iter(2)},
-       |${iter(3)},
+       |$newtonChainSql,
        |hm AS (SELECT
        |${headMoments("t_", "t")},
        |${headMoments("c_", "NOT t")}
@@ -3507,9 +3223,10 @@ object Extras {
         |    CAST(MAX(abs(cum1 * n2 - cum2 * n1)) AS DOUBLE)
         |      / CAST(n1 * n2 AS DOUBLE) END AS ks
         |FROM w GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin,
-    // Kaplan-Meier mirror: identical per-user observations (day-span
-    // duration, churn = last activity > 7 days before the corpus max),
-    // per-(cohort, t) exact counts, then the ascending-time survival
+    // Kaplan-Meier mirror: identical per-(user, event type) episode
+    // observations (day-span duration, churn = last activity > 7 days
+    // before the corpus max), per-(cohort, t) exact counts, then the
+    // ascending-time survival
     // recursion replayed stepwise (seed 1.0; 1.0*x == x, so the
     // stepwise products match the operator's in-row fold bit-for-bit).
     "c_kaplan_meier" ->
@@ -3518,7 +3235,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |g AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT 'c' || CAST(user_id % 3 AS VARCHAR) AS cohort,
@@ -3557,7 +3274,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |gm AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT user_id % 2 = 0 AS coh, duration,
@@ -3873,7 +3590,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |gm AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT user_id % 3 AS st, user_id % 2 = 0 AS coh1,
@@ -3980,7 +3697,7 @@ object Extras {
         |    MAX(CAST(ts AS DATE)) AS last_d,
         |    COUNT(*) AS cnt
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |gm AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT duration,
@@ -4140,7 +3857,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |g AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT 'c' || CAST(user_id % 3 AS VARCHAR) AS cohort,
@@ -4208,7 +3925,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |g AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT 'c' || CAST(user_id % 3 AS VARCHAR) AS cohort,
@@ -4255,7 +3972,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |gm AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT user_id % 2 = 0 AS coh1, duration,
@@ -4320,7 +4037,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |g AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT 'c' || CAST(user_id % 3 AS VARCHAR) AS cohort,
@@ -4361,7 +4078,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |gm AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT user_id % 2 = 0 AS coh1, duration,
@@ -4748,7 +4465,7 @@ object Extras {
         |      MAX(CAST(ts AS DATE))) AS DOUBLE) AS duration,
         |    MAX(CAST(ts AS DATE)) AS last_d
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
+        |  GROUP BY user_id, event_type),
         |gm AS (SELECT MAX(CAST(ts AS DATE)) AS gmax FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |obs AS (SELECT user_id % 2 = 0 AS coh1, duration,

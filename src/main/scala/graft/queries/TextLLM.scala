@@ -649,55 +649,67 @@ object TextLLM {
       .withColumn("w_disagree", round(col("w_disagree"), 12))
       .orderBy("field")
 
-  /** SQL mirror of the fixed-3-iteration EM: p0 holds the init params;
-    * each iteration is (posterior e_k → quantize q_k → sums a_k → new
-    * params p_k); the final SELECT unpivots p3 into per-field rows.
-    * Every float op mirrors the Scala side exactly — left-assoc factor
-    * products in declared field order, floor-quantized BIGINT sums,
-    * single IEEE divisions of exact longs. */
-  private val linkageEmOracle: String = {
-    val fs = Seq("lang", "len", "prefix", "source")
+  /** The agreement fields the EM mirrors score, alphabetical = the
+    * sort_array fold order `score()` pins. */
+  private val emFields = Seq("lang", "len", "prefix", "source")
+
+  /** The fixed-3-iteration EM of [[graft.operators.Linkage
+    * .emTrainWeights]] as chained CTEs over a `pairs` CTE carrying one
+    * `f_<field>` agreement flag per [[emFields]] entry: `<p>0` holds the
+    * init params; iteration k is (posterior `<e>k` → quantize `<q>k` →
+    * sums `<a>k` → new params `<p>k`), so `<p>3` holds the fitted
+    * m/u/lam. Every float op mirrors the Scala side exactly — left-assoc
+    * factor products in field order, floor-quantized BIGINT sums,
+    * single IEEE divisions of exact longs. The CTE name prefixes are
+    * arguments so a query whose own CTEs already take some of them can
+    * rename the chain. */
+  private def emIterCtes(e: String, q: String, a: String, p: String)
+      : String = {
     val one = "CAST(1 AS DOUBLE)"
-    val q = "CAST(1000000 AS DOUBLE)"
+    val qs = "CAST(1000000 AS DOUBLE)"
     val sQ = 1000000L // smoothing=1 × quantScale
-    def prod(p: String) = fs.map(n =>
-      s"(CASE WHEN f_$n IS NULL THEN $one WHEN f_$n THEN ${p}_$n " +
-        s"ELSE $one - ${p}_$n END)").mkString(" * ")
-    val p0 = s"p0 AS (SELECT " +
-      (fs.map(n => s"CAST(0.9 AS DOUBLE) AS m_$n") ++
-       fs.map(n => s"CAST(0.1 AS DOUBLE) AS u_$n") ++
-       Seq("CAST(0.5 AS DOUBLE) AS lam")).mkString(", ") + ")"
-    def iter(k: Int): String = {
-      val fcols = fs.map(n => s"f_$n").mkString(", ")
-      s"""e$k AS (SELECT $fcols,
+    def prod(m: String) = emFields.map(n =>
+      s"(CASE WHEN f_$n IS NULL THEN $one WHEN f_$n THEN ${m}_$n " +
+        s"ELSE $one - ${m}_$n END)").mkString(" * ")
+    val init = s"${p}0 AS (SELECT " +
+      (emFields.map(n => s"CAST(0.9 AS DOUBLE) AS m_$n") ++
+        emFields.map(n => s"CAST(0.1 AS DOUBLE) AS u_$n") ++
+        Seq("CAST(0.5 AS DOUBLE) AS lam")).mkString(", ") + ")"
+    val fcols = emFields.map(n => s"f_$n").mkString(", ")
+    def iter(k: Int): String =
+      s"""$e$k AS (SELECT $fcols,
          |    (lam * ${prod("m")})
          |    / (lam * ${prod("m")} + ($one - lam) * ${prod("u")}) AS g
-         |  FROM pairs CROSS JOIN p${k - 1}),
-         |q$k AS (SELECT $fcols,
-         |    CAST(floor(g * $q) AS BIGINT) AS qg,
-         |    CAST(floor(($one - g) * $q) AS BIGINT) AS qu FROM e$k),
-         |a$k AS (SELECT ${fs.map(n =>
+         |  FROM pairs CROSS JOIN $p${k - 1}),
+         |$q$k AS (SELECT $fcols,
+         |    CAST(floor(g * $qs) AS BIGINT) AS qg,
+         |    CAST(floor(($one - g) * $qs) AS BIGINT) AS qu FROM $e$k),
+         |$a$k AS (SELECT ${emFields.map(n =>
              s"SUM(CASE WHEN f_$n THEN qg ELSE 0 END) AS gm_$n, " +
              s"SUM(CASE WHEN f_$n IS NOT NULL THEN qg ELSE 0 END) AS gt_$n, " +
              s"SUM(CASE WHEN f_$n THEN qu ELSE 0 END) AS um_$n, " +
              s"SUM(CASE WHEN f_$n IS NOT NULL THEN qu ELSE 0 END) AS ut_$n")
            .mkString(", ")},
-         |    SUM(qg) AS g_all, COUNT(*) AS n FROM q$k),
-         |p$k AS (SELECT ${fs.map(n =>
+         |    SUM(qg) AS g_all, COUNT(*) AS n FROM $q$k),
+         |$p$k AS (SELECT ${emFields.map(n =>
              s"CAST(gm_$n + $sQ AS DOUBLE) / CAST(gt_$n + ${2 * sQ} AS DOUBLE) AS m_$n, " +
              s"CAST(um_$n + $sQ AS DOUBLE) / CAST(ut_$n + ${2 * sQ} AS DOUBLE) AS u_$n")
            .mkString(", ")},
          |    CAST(g_all + $sQ AS DOUBLE)
-         |    / CAST(n * 1000000 + ${2 * sQ} AS DOUBLE) AS lam FROM a$k)""".stripMargin
-    }
-    val unpivot = fs.map(n =>
+         |    / CAST(n * 1000000 + ${2 * sQ} AS DOUBLE) AS lam FROM $a$k)""".stripMargin
+    (init +: (1 to 3).map(iter)).mkString(",\n")
+  }
+
+  /** SQL mirror of the fixed-3-iteration EM: [[emIterCtes]] as
+    * p0 → (e_k, q_k, a_k, p_k); the final SELECT unpivots p3 into
+    * per-field rows. */
+  private val linkageEmOracle: String = {
+    val one = "CAST(1 AS DOUBLE)"
+    val unpivot = emFields.map(n =>
       s"SELECT '$n' AS field, m_$n AS m, u_$n AS u, lam FROM p3")
       .mkString("\n  UNION ALL ")
     s"""WITH $linkagePairsCte,
-       |$p0,
-       |${iter(1)},
-       |${iter(2)},
-       |${iter(3)}
+       |${emIterCtes("e", "q", "a", "p")}
        |SELECT field, m, u, ROUND(ln(m / u), 12) AS w_agree,
        |  ROUND(ln(($one - m) / ($one - u)), 12) AS w_disagree,
        |  lam AS lambda
@@ -740,48 +752,14 @@ object TextLLM {
 
   /** SQL mirror of the COMPOSED resolution pipeline: the d_minhash
     * candidate CTEs over the twin corpus, pair agreements, the
-    * 3-iteration EM replay (the linkageEmOracle recursion renamed to
+    * 3-iteration EM replay ([[emIterCtes]] renamed to
     * wK/eeK/qqK/aaK — p, p2 and m are taken by the minhash CTEs), the
     * fixed-field-order score sum, and the min-label component walk.
     * Output is integer-only; see [[tEntityResolution]] for the one
     * ln-ulp caveat. */
   private val entityResolutionOracle: String = {
-    val fs = Seq("lang", "len", "prefix", "source") // alphabetical =
-    // the sort_array fold order score() pins
     val one = "CAST(1 AS DOUBLE)"
-    val q = "CAST(1000000 AS DOUBLE)"
-    val sQ = 1000000L // smoothing=1 × quantScale
-    def prod(p: String) = fs.map(n =>
-      s"(CASE WHEN f_$n IS NULL THEN $one WHEN f_$n THEN ${p}_$n " +
-        s"ELSE $one - ${p}_$n END)").mkString(" * ")
-    val w0 = s"w0 AS (SELECT " +
-      (fs.map(n => s"CAST(0.9 AS DOUBLE) AS m_$n") ++
-        fs.map(n => s"CAST(0.1 AS DOUBLE) AS u_$n") ++
-        Seq("CAST(0.5 AS DOUBLE) AS lam")).mkString(", ") + ")"
-    def iter(k: Int): String = {
-      val fcols = fs.map(n => s"f_$n").mkString(", ")
-      s"""ee$k AS (SELECT $fcols,
-         |    (lam * ${prod("m")})
-         |    / (lam * ${prod("m")} + ($one - lam) * ${prod("u")}) AS g
-         |  FROM pairs CROSS JOIN w${k - 1}),
-         |qq$k AS (SELECT $fcols,
-         |    CAST(floor(g * $q) AS BIGINT) AS qg,
-         |    CAST(floor(($one - g) * $q) AS BIGINT) AS qu FROM ee$k),
-         |aa$k AS (SELECT ${fs.map(n =>
-             s"SUM(CASE WHEN f_$n THEN qg ELSE 0 END) AS gm_$n, " +
-             s"SUM(CASE WHEN f_$n IS NOT NULL THEN qg ELSE 0 END) AS gt_$n, " +
-             s"SUM(CASE WHEN f_$n THEN qu ELSE 0 END) AS um_$n, " +
-             s"SUM(CASE WHEN f_$n IS NOT NULL THEN qu ELSE 0 END) AS ut_$n")
-           .mkString(", ")},
-         |    SUM(qg) AS g_all, COUNT(*) AS n FROM qq$k),
-         |w$k AS (SELECT ${fs.map(n =>
-             s"CAST(gm_$n + $sQ AS DOUBLE) / CAST(gt_$n + ${2 * sQ} AS DOUBLE) AS m_$n, " +
-             s"CAST(um_$n + $sQ AS DOUBLE) / CAST(ut_$n + ${2 * sQ} AS DOUBLE) AS u_$n")
-           .mkString(", ")},
-         |    CAST(g_all + $sQ AS DOUBLE)
-         |    / CAST(n * 1000000 + ${2 * sQ} AS DOUBLE) AS lam FROM aa$k)""".stripMargin
-    }
-    val contrib = fs.map(n =>
+    val contrib = emFields.map(n =>
       s"CASE WHEN f_$n IS NULL THEN CAST(0 AS DOUBLE) " +
         s"WHEN f_$n THEN ln(m_$n / u_$n) " +
         s"ELSE ln(($one - m_$n) / ($one - u_$n)) END")
@@ -800,10 +778,7 @@ object TextLLM {
        |    da.source = db.source AS f_source
        |  FROM cand JOIN d da ON da.doc_id = cand.id_a
        |    JOIN d db ON db.doc_id = cand.id_b),
-       |$w0,
-       |${iter(1)},
-       |${iter(2)},
-       |${iter(3)},
+       |${emIterCtes("ee", "qq", "aa", "w")},
        |sc AS (SELECT id_a, id_b,
        |    $contrib AS link_score
        |  FROM pairs CROSS JOIN w3),
@@ -1474,6 +1449,18 @@ object TextLLM {
       .orderBy("media_id")
   }
 
+  /** The verify tail of the 64-bit signature near-dup queries: banded
+    * candidates (4 bands) over `sigs` (id, simhash), both signatures
+    * joined back, and the pairs within `maxBits` Hamming distance. */
+  private def hashNearDupPairs(sigs: DataFrame, maxBits: Int): DataFrame =
+    Dedup.simhashCandidatesFromSigs(sigs, bands = 4)
+      .join(sigs.select(col("id").as("id_a"), col("simhash").as("ha")), "id_a")
+      .join(sigs.select(col("id").as("id_b"), col("simhash").as("hb")), "id_b")
+      .withColumn("hamming", Dedup.hamming64(col("ha"), col("hb")))
+      .filter(col("hamming") <= maxBits)
+      .select(col("id_a"), col("id_b"), col("hamming"))
+      .orderBy("id_a", "id_b")
+
   /** Image near-dup detection end to end through the REAL codec: 9×8 PNGs
     * from the m_png pixel formula (base images for doc_id < 40, verbatim
     * twins at +1000 for doc_id < 12, one-pixel-edited near twins at +2000
@@ -1503,15 +1490,8 @@ object TextLLM {
           (if (id < 6) Seq((id + 2000) -> png(bump = true)) else Nil)
       }
     }.toDF("id", "payload")
-    val sigs = Multimodal.imageDHashes(images, col("id"), col("payload"))
-    val cand = Dedup.simhashCandidatesFromSigs(sigs, bands = 4)
-    cand
-      .join(sigs.select(col("id").as("id_a"), col("simhash").as("ha")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("simhash").as("hb")), "id_b")
-      .withColumn("hamming", Dedup.hamming64(col("ha"), col("hb")))
-      .filter(col("hamming") <= 6)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .orderBy("id_a", "id_b")
+    hashNearDupPairs(
+      Multimodal.imageDHashes(images, col("id"), col("payload")), maxBits = 6)
   }
 
   /** pHash (DCT) image near-duplicate detection — the frequency-domain
@@ -1548,15 +1528,8 @@ object TextLLM {
            else Nil)
       }
     }.toDF("id", "payload")
-    val sigs = Multimodal.imagePHashes(images, col("id"), col("payload"))
-    val cand = Dedup.simhashCandidatesFromSigs(sigs, bands = 4)
-    cand
-      .join(sigs.select(col("id").as("id_a"), col("simhash").as("ha")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("simhash").as("hb")), "id_b")
-      .withColumn("hamming", Dedup.hamming64(col("ha"), col("hb")))
-      .filter(col("hamming") <= 8)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .orderBy("id_a", "id_b")
+    hashNearDupPairs(
+      Multimodal.imagePHashes(images, col("id"), col("payload")), maxBits = 8)
   }
 
   /** EXIF provenance extraction end to end ([[Multimodal.exifTags]]):
@@ -1629,15 +1602,9 @@ object TextLLM {
           (if (id < 6) Seq((id + 2000) -> wav(1, bump = true)) else Nil)
       }
     }.toDF("id", "payload")
-    val sigs = Multimodal.audioFingerprints(audio, col("id"), col("payload"))
-    val cand = Dedup.simhashCandidatesFromSigs(sigs, bands = 4)
-    cand
-      .join(sigs.select(col("id").as("id_a"), col("simhash").as("ha")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("simhash").as("hb")), "id_b")
-      .withColumn("hamming", Dedup.hamming64(col("ha"), col("hb")))
-      .filter(col("hamming") <= 6)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .orderBy("id_a", "id_b")
+    hashNearDupPairs(
+      Multimodal.audioFingerprints(audio, col("id"), col("payload")),
+      maxBits = 6)
   }
 
   /** Real-resize round trip: synthesize a deterministic `w×h` PNG per id
@@ -1902,6 +1869,26 @@ object TextLLM {
        |ORDER BY 1, 2""".stripMargin
   }
 
+  /** SQL mirror of [[hashNearDupPairs]] over a `sig` (id, simhash)
+    * CTE: 4 16-bit band buckets, buckets over 200 members dropped,
+    * distinct candidate pairs, and the pairs within `maxBits` Hamming
+    * distance. */
+  private def hashNearDupPairsSql(maxBits: Int): String =
+    s"""bk AS (SELECT id, b,
+       |    (simhash >> CAST(b * 16 AS INTEGER)) & 65535 AS bucket
+       |  FROM sig CROSS JOIN range(4) rb(b)),
+       |capped AS (SELECT id, b, bucket FROM (
+       |    SELECT id, b, bucket, COUNT(*) OVER (PARTITION BY b, bucket) AS n
+       |    FROM bk) WHERE n <= 200),
+       |cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
+       |  FROM capped a JOIN capped c
+       |    ON a.b = c.b AND a.bucket = c.bucket AND a.id < c.id)
+       |SELECT id_a, id_b,
+       |  CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INTEGER) AS hamming
+       |FROM cand JOIN sig sa ON sa.id = id_a JOIN sig sb ON sb.id = id_b
+       |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= $maxBits
+       |ORDER BY 1, 2""".stripMargin
+
   /** m_phash_neardups mirror — built programmatically so the
     * fixed-point DCT table is interpolated from
     * [[graft.operators.Multimodal.DctT]], the single source of truth
@@ -1945,20 +1932,7 @@ object TextLLM {
        |        CAST(ac.v * 8 + ac.u - 1 AS INTEGER))
        |      ELSE 0 END) AS BIGINT) AS simhash
        |  FROM ac JOIN med ON med.id = ac.id GROUP BY 1),
-       |bk AS (SELECT id, b,
-       |    (simhash >> CAST(b * 16 AS INTEGER)) & 65535 AS bucket
-       |  FROM sig CROSS JOIN range(4) rb(b)),
-       |capped AS (SELECT id, b, bucket FROM (
-       |    SELECT id, b, bucket, COUNT(*) OVER (PARTITION BY b, bucket) AS n
-       |    FROM bk) WHERE n <= 200),
-       |cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-       |  FROM capped a JOIN capped c
-       |    ON a.b = c.b AND a.bucket = c.bucket AND a.id < c.id)
-       |SELECT id_a, id_b,
-       |  CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INTEGER) AS hamming
-       |FROM cand JOIN sig sa ON sa.id = id_a JOIN sig sb ON sb.id = id_b
-       |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 8
-       |ORDER BY 1, 2""".stripMargin
+       |${hashNearDupPairsSql(8)}""".stripMargin
   }
 
   val oracle: Map[String, String] = Map(
@@ -3274,7 +3248,7 @@ object TextLLM {
     // Every arithmetic step integer-exact; bit 63 forces the HUGEINT
     // detour (BIGINT << 63 overflows in DuckDB).
     "m_dhash_neardups" ->
-      """WITH imgs AS (
+      s"""WITH imgs AS (
         |  SELECT doc_id AS id, doc_id AS src, FALSE AS bump
         |  FROM documents WHERE doc_id < 40
         |  UNION ALL
@@ -3303,20 +3277,7 @@ object TextLLM {
         |      WHEN h >= (CAST(1 AS HUGEINT) << 63)
         |      THEN (CAST(1 AS HUGEINT) << 64) ELSE CAST(0 AS HUGEINT) END
         |    AS BIGINT) AS simhash FROM hh),
-        |bk AS (SELECT id, b,
-        |    (simhash >> CAST(b * 16 AS INTEGER)) & 65535 AS bucket
-        |  FROM sig CROSS JOIN range(4) rb(b)),
-        |capped AS (SELECT id, b, bucket FROM (
-        |    SELECT id, b, bucket, COUNT(*) OVER (PARTITION BY b, bucket) AS n
-        |    FROM bk) WHERE n <= 200),
-        |cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-        |  FROM capped a JOIN capped c
-        |    ON a.b = c.b AND a.bucket = c.bucket AND a.id < c.id)
-        |SELECT id_a, id_b,
-        |  CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INTEGER) AS hamming
-        |FROM cand JOIN sig sa ON sa.id = id_a JOIN sig sb ON sb.id = id_b
-        |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 6
-        |ORDER BY 1, 2""".stripMargin,
+        |${hashNearDupPairsSql(6)}""".stripMargin,
     // pHash mirror: pixels → luma → exact BIGINT DCT via the SAME
     // interpolated fixed-point table (no cosine evaluated here) →
     // 32nd-smallest median threshold → 63-bit pack (no HUGEINT dance:
@@ -3326,7 +3287,7 @@ object TextLLM {
     // energy windows → delta bits → HUGEINT pack → band buckets →
     // Hamming, all integer-exact (same CTE skeleton as m_dhash_neardups).
     "m_audio_fingerprint_neardups" ->
-      """WITH aud AS (
+      s"""WITH aud AS (
         |  SELECT doc_id AS id, doc_id AS src, 1 AS mul, FALSE AS bump
         |  FROM documents WHERE doc_id < 40
         |  UNION ALL
@@ -3354,20 +3315,7 @@ object TextLLM {
         |      WHEN h >= (CAST(1 AS HUGEINT) << 63)
         |      THEN (CAST(1 AS HUGEINT) << 64) ELSE CAST(0 AS HUGEINT) END
         |    AS BIGINT) AS simhash FROM hh),
-        |bk AS (SELECT id, b,
-        |    (simhash >> CAST(b * 16 AS INTEGER)) & 65535 AS bucket
-        |  FROM sig CROSS JOIN range(4) rb(b)),
-        |capped AS (SELECT id, b, bucket FROM (
-        |    SELECT id, b, bucket, COUNT(*) OVER (PARTITION BY b, bucket) AS n
-        |    FROM bk) WHERE n <= 200),
-        |cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-        |  FROM capped a JOIN capped c
-        |    ON a.b = c.b AND a.bucket = c.bucket AND a.id < c.id)
-        |SELECT id_a, id_b,
-        |  CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INTEGER) AS hamming
-        |FROM cand JOIN sig sa ON sa.id = id_a JOIN sig sb ON sb.id = id_b
-        |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 6
-        |ORDER BY 1, 2""".stripMargin,
+        |${hashNearDupPairsSql(6)}""".stripMargin,
     // JPEG mirror: constant-gray payloads are the exactly-round-tripping
     // class (see Multimodal.encodeJpeg), so the decoded sums are the pure
     // integer formula w·h·v per channel.

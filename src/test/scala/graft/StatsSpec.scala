@@ -2992,4 +2992,29 @@ class StatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.toSeq).toSet)
     assert(a1.keySet == Set("q0", "q1", "q2", "q3"))
   }
+
+  test("registered survival queries observe churn events on sf0.01 testdata") {
+    val dir = "/root/testdata/sf0.01"
+    def run(name: String) = SparkEntry.queries(name)(spark, dir).collect()
+    // log-rank: churn events give the test a variance, so chi2 exists
+    val lr = run("c_log_rank")
+    assert(lr.length == 1)
+    assert(!lr.head.isNullAt(lr.head.fieldIndex("chi2")),
+      s"chi2 is null: ${lr.head}")
+    // Kaplan-Meier: every cohort's curve steps below 1.0
+    val km = run("c_kaplan_meier")
+    val minSurv = km.groupBy(_.getAs[String]("cohort"))
+      .map { case (c, rs) => c -> rs.map(_.getAs[Double]("survival")).min }
+    assert(minSurv.keySet == Set("c0", "c1", "c2"), s"$minSurv")
+    minSurv.foreach { case (c, m) =>
+      assert(m < 1.0, s"cohort $c never leaves survival 1.0")
+    }
+    // competing risks: both causes reach a positive incidence
+    val cif = run("c_cuminc").groupBy(_.getAs[Int]("cause"))
+      .map { case (k, rs) => k -> rs.map(_.getAs[Double]("cif")).max }
+    assert(cif.keySet == Set(1, 2), s"$cif")
+    cif.foreach { case (k, m) =>
+      assert(m > 0.0, s"cause $k has no incidence")
+    }
+  }
 }

@@ -18,6 +18,8 @@ for _a in sys.argv[1:]:
     if _a.startswith("--only="):
         ONLY = {s.strip() for s in _a[len("--only="):].split(",") if s.strip()}
 OUT = "/tmp/verify_out_" + os.path.basename(SFDIR.rstrip("/"))  # per-SF dir: concurrent gates must not clobber each other
+# The checkout this script lives in (tools/..): Verify runs that tree's code.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
@@ -28,7 +30,7 @@ def run_verify():
         env["GRAFT_VERIFY_ONLY"] = ",".join(sorted(ONLY))
     r = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Verify {SFDIR} {OUT}"],
-        capture_output=True, text=True, cwd="/root/repo", env=env)
+        capture_output=True, text=True, cwd=REPO, env=env)
     if r.returncode != 0:
         print(r.stdout[-4000:], r.stderr[-2000:])
         sys.exit(f"Verify main failed rc={r.returncode}")
